@@ -6,15 +6,16 @@ package graft
   * merge table) is populated by whichever entry touches it FIRST, so
   * that entry's recorded time carries the fill while every later
   * toucher reads it for free. Rather than chasing each such entry with
-  * a manual steady-state probe, every cache's computeIfAbsent body
+  * a manual steady-state probe, every `SessionStore.fill` body
   * reports its wall time here and `Bench` emits the ledger as a
   * `fills` field — the record then separates "what the entry costs"
   * from "what the cache cost to build" by subtraction, per cache, per
   * dataset.
   *
-  * Accounting notes: a fill is recorded at most once per (cache,
-  * dataset) per JVM (computeIfAbsent runs the body once); `timed` sums
-  * defensively in case a cache is keyed wider than (session, dataset).
+  * Accounting notes: a fill is recorded once per (cache, dataset) per
+  * Spark application (`SessionStore` runs a body once per key; a body
+  * that throws records nothing and its retry bills again); `timed`
+  * sums, so fills of one (cache, dataset) by two applications add up.
   * The ledger is process-global and append-only during a run; `Bench`
   * snapshots it after the last rep, so warm-up fills (keyed by the
   * warm-up SF) appear under their own dataset key and are

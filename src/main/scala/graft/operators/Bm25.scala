@@ -58,13 +58,9 @@ object Bm25 {
     * lifecycle faces (`appendToIndex`, `compactIndex`) keep reading
     * the stats file directly — freshness over speed on mutation paths.
     */
-  private val bucketsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Integer]()
-
   private def servedNBuckets(spark: SparkSession, dir: String): Int =
-    bucketsCache.computeIfAbsent((spark.sparkContext.applicationId, dir),
-      _ => spark.read.parquet(s"$dir/stats")
-        .select("n_buckets").head().getInt(0)).intValue()
+    graft.SessionStore.memo(spark, "bm25_n_buckets", dir)(
+      spark.read.parquet(s"$dir/stats").select("n_buckets").head().getInt(0))
 
   /** The serving faces' corpus-stats memo (r21, guide §2.4): every
     * `servedTopKDf` call crossJoined the one-row stats PARQUET into the
@@ -80,17 +76,16 @@ object Bm25 {
     * keep reading the stats file directly — freshness on mutation
     * paths (the `servedNBuckets` contract).
     */
-  private val statsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  private val StatsMemo = "bm25_stats_row"
 
   private def servedStatsDf(spark: SparkSession, dir: String): DataFrame =
-    statsCache.computeIfAbsent((spark.sparkContext.applicationId, dir), { _ =>
+    graft.SessionStore.memo(spark, StatsMemo, dir) {
       val r = spark.read.parquet(s"$dir/stats")
         .select("n_docs", "sum_len", "avgdl").head()
       import spark.implicits._
       Seq((r.getLong(0), r.getLong(1), r.getDouble(2)))
         .toDF("n_docs", "sum_len", "avgdl")
-    })
+    }
 
   /** Per-(term, doc) postings: (term, doc_id, tf). One narrow explode,
     * one partial-aggregated groupBy — the map side combines before the
@@ -385,8 +380,7 @@ object Bm25 {
     // compact), so dropping the serving memo at the write keeps the
     // growth contract exact: the next served call re-reads the fresh
     // row (n_buckets is structural and never changes — its memo stays)
-    statsCache.remove((spark.sparkContext.applicationId, dir))
-    ()
+    graft.SessionStore.invalidate(spark, StatsMemo, dir)
   }
 
   /** Append new documents to a saved index without touching existing

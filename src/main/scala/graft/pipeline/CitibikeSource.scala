@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{SessionStore, Tables}
 
 /** The reference's shared read-only source DB
   * (`snowflake_demo_resources.citibike_reset_v2.{trips,stations,programs}`,
@@ -66,12 +66,9 @@ object CitibikeSource {
   // Memoized: the count is a plan-build-time scalar, and paying a Spark
   // action on every trips() plan construction is measurable overhead
   // (supplier is dimension-sized at any SF, but the job launch isn't free).
-  private val supplierCounts =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]()
-
   def supplierCount(spark: SparkSession, sfDir: String): Long =
-    supplierCounts.computeIfAbsent((spark, sfDir),
-      _ => Tables.load(spark, sfDir, "supplier").count()).longValue()
+    SessionStore.memo(spark, "supplier_count", sfDir)(
+      Tables.load(spark, sfDir, "supplier").count())
 
   /** The SQL used to derive trips, for embedding in DuckDB oracle queries
     * (supplier count via scalar subquery so the same text works at any SF).

@@ -35,19 +35,13 @@ object CorpusPipelineQueries extends QueryPack {
     * replay the clean chain from scratch (CleanSql), so a drift in the
     * persisted round-trip flips those hashes.
     */
-  private val cleanDirCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   private def servedCleanDir(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    cleanDirCache.computeIfAbsent((s.sparkContext.applicationId, d), { _ =>
-      graft.CacheFills.timed("corpus_clean_store", d) {
-      val dir = graft.Artifacts.tempArtifactDir("graft_clean")
+    graft.SessionStore.dir(s, "corpus_clean_store", d) { dir =>
       CorpusPipeline.clean(Tables.load(s, d, "documents"))
         .write.mode("overwrite").parquet(s"$dir/cleaned")
       s"$dir/cleaned"
-      }
-    })
+    }
 
   /** The derived second snapshot shared by x10 (diff), x11 (drift), and
     * d17 (incremental dedup): md5-selected tenths — one dropped, one

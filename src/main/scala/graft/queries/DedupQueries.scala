@@ -35,14 +35,9 @@ object DedupQueries extends QueryPack {
     * d8 hashes, so the drop set cannot drift from the report; d8c's
     * oracle still replays the whole gram chain from the raw table.
     */
-  private val decontReportCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), String]()
-
   private def decontReportStoreDir(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    decontReportCache.computeIfAbsent((s.sparkContext.applicationId, d), { _ =>
-      graft.CacheFills.timed("decont_report_store", d) {
-      val dir = graft.Artifacts.tempArtifactDir("graft_decont_report")
+    graft.SessionStore.dir(s, "decont_report_store", d) { dir =>
       val bucket = conv(substring(md5(col("doc_id").cast("string")), 1, 8),
         16, 10).cast("bigint") % 100
       val docs = Tables.load(s, d, "documents")
@@ -51,8 +46,7 @@ object DedupQueries extends QueryPack {
           "doc_id", "text", n = 8)
         .write.mode("overwrite").parquet(dir + "/report")
       dir + "/report"
-      }
-    })
+    }
 
   /** DuckDB CTE computing the 64-bit SimHash fingerprint (`fp(doc_id,
     * simhash)`) exactly as `DedupOps.simHash`: bits 2d/2d+1 = bits 3/2
@@ -123,25 +117,20 @@ object DedupQueries extends QueryPack {
     * components), and before this cache each one re-ran the corpus
     * shingle+join from scratch. The checkpointed pairs are tiny (the
     * near-dup pair count, not the corpus), so the cache holds O(pairs)
-    * blocks, never O(corpus). Same staleness caveat as n5's ivfDirCache:
-    * if files under `d` are regenerated mid-application, key by a
-    * content fingerprint or drop the cache.
+    * blocks, never O(corpus). The `SessionStore` staleness caveat
+    * applies: the store assumes files under `d` are not regenerated
+    * mid-application.
     */
-  private val pairCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), org.apache.spark.sql.DataFrame]()
-
   private[queries] def nearDupPairs(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    pairCache.computeIfAbsent((s.sparkContext.applicationId, d), { _ =>
-      graft.CacheFills.timed("neardup_pairs", d) {
+    graft.SessionStore.fill(s, "neardup_pairs", d) {
       val sh = graft.operators.DedupOps
         .shingles(Tables.load(s, d, "documents"), "doc_id", "text")
       val capped = graft.operators.DedupOps.cappedShingles(sh, maxDf = 100000L)
         .localCheckpoint()
       graft.operators.DedupOps.jaccardPairs(capped, threshold = 0.5)
         .localCheckpoint()
-      }
-    })
+    }
 
   /** The DuckDB twin of `nearDupPairs`, ending in `jp(d1, d2, jaccard)`
     * — the single source both d2's and d9's oracle SQL build on.

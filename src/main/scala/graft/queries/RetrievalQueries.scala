@@ -140,28 +140,25 @@ object RetrievalQueries extends QueryPack {
     * first use, reused by every later b4 invocation (bench reps, verify,
     * plan audits). Build-once-serve-many IS the serving contract, and
     * the testdata dir is immutable for the application's lifetime (the
-    * servedIvfDir precedent, SimilarityQueries.scala:105). Temp dir is
-    * deleted on JVM exit.
+    * `SessionStore` assumption). Temp dir is deleted on JVM exit.
     */
-  private val bm25DirCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private[graft] def servedBm25Dir(s: org.apache.spark.sql.SparkSession, d: String): String =
+    graft.SessionStore.dir(s, "bm25_b4_store", d) { dir =>
+      Bm25.buildIndex(Tables.load(s, d, "documents"), "doc_id", "text",
+        dir, nBuckets = 64)
+      dir
+    }
 
   /** One persisted MaxSim token store per (session, dataset) — the
-    * bm25DirCache build-once contract for b10's serving face.
+    * `SessionStore` build-once contract for b10's serving face.
     */
-  private val tokenStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   private def servedTokenStoreDir(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    tokenStoreCache.computeIfAbsent((s.sparkContext.applicationId, d), { _ =>
-      graft.CacheFills.timed("maxsim_b10_store", d) {
-      val dir = graft.Artifacts.tempArtifactDir("graft_maxsim_b10")
+    graft.SessionStore.dir(s, "maxsim_b10_store", d) { dir =>
       graft.operators.LateInteraction.buildTokenStore(
         Tables.load(s, d, "documents"), "doc_id", "text", dir)
       dir
-      }
-    })
+    }
 
   /** The t37/t38 kNN replay over the shared id-level CTEs — one SQL
     * string for both faces (ad-hoc derivation and loaded artifact), so
@@ -195,22 +192,16 @@ object RetrievalQueries extends QueryPack {
        FROM ranked WHERE rnk <= 10 ORDER BY query_id, rnk"""
   }
 
-  /** One persisted token-embedding table per (session, dataset) — the
-    * sqDirCache discipline for t38's serving face.
+  /** One persisted token-embedding table per (session, dataset) — a
+    * `SessionStore.dir` fill for t38's serving face.
     */
-  private val tokenEmbCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   private[graft] def servedTokenEmbDir(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    tokenEmbCache.computeIfAbsent((s.sparkContext.applicationId, d), { _ =>
-      graft.CacheFills.timed("token_emb_t38_store", d) {
-      val dir = graft.Artifacts.tempArtifactDir("graft_tokemb_t38")
+    graft.SessionStore.dir(s, "token_emb_t38_store", d) { dir =>
       graft.operators.TokenEmbeddingTable.save(
         s, TextQueries.frozenByteMerges(s, d), dir + "/table")
       dir + "/table"
-      }
-    })
+    }
 
   /** The persisted CORPUS VECTOR STORE — VERDICT r17 #1: the corpus
     * side of a served dense retriever embedded ONCE at index-build time
@@ -226,14 +217,9 @@ object RetrievalQueries extends QueryPack {
     * vector-serving tier mounts; refreshing it is an `embedDocs` batch
     * over the delta, not a per-query pass.
     */
-  private val tokenVecDirCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   private[graft] def servedTokenVecDir(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    tokenVecDirCache.computeIfAbsent((s.sparkContext.applicationId, d), { _ =>
-      graft.CacheFills.timed("token_vec_store", d) {
-      val dir = graft.Artifacts.tempArtifactDir("graft_tokvec")
+    graft.SessionStore.dir(s, "token_vec_store", d) { dir =>
       graft.operators.TokenEmbeddingTable.embedDocs(
           // r20: the session token-ids store is the tokenize-once
           // artifact; re-tokenizing here would duplicate its work
@@ -242,8 +228,7 @@ object RetrievalQueries extends QueryPack {
             s, servedTokenEmbDir(s, d)))
         .write.mode("overwrite").parquet(s"$dir/vectors")
       s"$dir/vectors"
-      }
-    })
+    }
 
   /** b13's ANN tier: the corpus token-table vectors behind a FULL
     * IVF-PQ serving artifact (coarse cells + residual codebooks +
@@ -334,14 +319,9 @@ object RetrievalQueries extends QueryPack {
     ScopeSources.map(("acct_a", _)) ++
       Seq(("acct_b", "src2"), ("acct_b", "src5"), ("acct_b", "src13"))
 
-  private val tokenIvfPqDirCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   private[graft] def servedTokenIvfPqDir(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    tokenIvfPqDirCache.computeIfAbsent((s.sparkContext.applicationId, d), { _ =>
-      graft.CacheFills.timed("token_ivfpq_b13_store", d) {
-      val dir = graft.Artifacts.tempArtifactDir("graft_tokivfpq")
+    graft.SessionStore.dir(s, "token_ivfpq_b13_store", d) { dir =>
       val q = ServingCache.parquetDf(s, servedTokenVecDir(s, d))
         .filter(HashedEmbedding.norm2("embedding") > 0L)
         .select(col("vec_id"),
@@ -373,18 +353,7 @@ object RetrievalQueries extends QueryPack {
           TokCellTarget, current = Some(kn),
           maxTrainRows = TokFitSample)
       dir + "/idx"
-      }
-    })
-
-  private[graft] def servedBm25Dir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    bm25DirCache.computeIfAbsent((s.sparkContext.applicationId, d), { _ =>
-      graft.CacheFills.timed("bm25_b4_store", d) {
-      val dir = graft.Artifacts.tempArtifactDir("graft_bm25_b4")
-      Bm25.buildIndex(Tables.load(s, d, "documents"), "doc_id", "text",
-        dir, nBuckets = 64)
-      dir
-      }
-    })
+    }
 
   val queries: Seq[Q] = Seq(
 
@@ -1097,8 +1066,8 @@ object RetrievalQueries extends QueryPack {
         // own hoisted face (servedTopKScopedWith's scaladoc; r21 —
         // every execution used to re-run the full docs-store pass)
         val bmDir = servedBm25Dir(s, d)
-        val scopedSt = ServingCache.bm25ScopedStats(s, bmDir, "b14_scope",
-          d, () => Bm25.scopedStats(s, bmDir, allowed))
+        val scopedSt = ServingCache.bm25ScopedStats(s, "b14_scope", d,
+          () => Bm25.scopedStats(s, bmDir, allowed))
         val lex = Bm25.servedTopKScopedWith(s, bmDir,
             Queries.toDF("query_id", "q_text"), HybK, allowed, scopedSt)
           .select("query_id", "doc_id", "rnk")
@@ -1222,8 +1191,8 @@ object RetrievalQueries extends QueryPack {
         // session (perGrantStats' scaladoc hoist; r21 — the inline face
         // re-scanned the docs store per execution)
         val bmDir = servedBm25Dir(s, d)
-        val grantSt = ServingCache.bm25ScopedStats(s, bmDir, "b15_grants",
-          d, () => Bm25.perGrantStats(s, bmDir, grantPairs))
+        val grantSt = ServingCache.bm25ScopedStats(s, "b15_grants", d,
+          () => Bm25.perGrantStats(s, bmDir, grantPairs))
         val lex = Bm25.servedTopKPerGrantWith(s, bmDir, aq,
             HybK, grantPairs, grantSt)
           .select("account", "query_id", "doc_id", "rnk")

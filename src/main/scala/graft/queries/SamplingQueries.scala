@@ -40,21 +40,15 @@ object SamplingQueries extends QueryPack {
   // (the oracle would catch it, but late). Oracle SQL keeps its 2048
   // literals: those strings ARE the declared computation.
   private[queries] val WindowW = 2048L
-  private val censusCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), String]()
-
   private def windowCensusStoreDir(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    censusCache.computeIfAbsent((s.sparkContext.applicationId, d), { _ =>
-      graft.CacheFills.timed("window_census_store", d) {
-      val dir = graft.Artifacts.tempArtifactDir("graft_window_census")
+    graft.SessionStore.dir(s, "window_census_store", d) { dir =>
       graft.operators.ContextPacking.packedWindows(
           s.read.parquet(TextQueries.tokenIdsStoreDir(s, d)), WindowW)
         .select("shard", "window_id", "n_docs", "n_tokens", "fill_e6")
         .write.mode("overwrite").parquet(dir + "/census")
       dir + "/census"
-      }
-    })
+    }
 
   val queries: Seq[Q] = Seq(
 

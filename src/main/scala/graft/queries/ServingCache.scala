@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session-scoped memos of SERVING-ARTIFACT state the query entries
@@ -12,54 +10,30 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * aggregate — all over artifacts that are IMMUTABLE once their fill
   * completes).
   *
-  * Scope and safety: keys are (applicationId, artifact dir). Every dir
-  * cached here is a per-session temp artifact built exactly once by a
-  * `CacheFills`-timed fill (the sqDirCache discipline) and never
-  * mutated afterwards — retrain/append lifecycle faces (which DO swap
+  * Scope and safety: `SessionStore` keys are (applicationId, artifact
+  * dir). Every dir memoized here is a per-session temp artifact built
+  * exactly once by a `SessionStore.dir` fill and never mutated
+  * afterwards — retrain/append lifecycle faces (which DO swap
   * artifact state in place) run inside the fill or in their own specs
   * and must keep calling the uncached loaders. This is the
   * model-resident serving shape: a serving tier loads its model once
-  * per process, not once per query (the kmCache/nlCache discipline
+  * per process, not once per query (the `SessionStore` fill discipline
   * extended to the load side).
   */
 private[queries] object ServingCache {
-
-  private val models = new ConcurrentHashMap[
-    (String, String), (Seq[Array[Long]], Seq[Seq[Array[Long]]])]()
+  import graft.SessionStore.memo
 
   def ivfPqModel(s: SparkSession, dir: String):
       (Seq[Array[Long]], Seq[Seq[Array[Long]]]) =
-    models.computeIfAbsent((s.sparkContext.applicationId, dir),
-      _ => graft.operators.IvfPq.loadModel(s, dir))
-
-  private val knobs = new ConcurrentHashMap[
-    (String, String), Option[graft.operators.IvfPq.Knobs]]()
+    memo(s, "ivfpq_model", dir)(graft.operators.IvfPq.loadModel(s, dir))
 
   def ivfPqKnobs(s: SparkSession, dir: String):
       Option[graft.operators.IvfPq.Knobs] =
-    knobs.computeIfAbsent((s.sparkContext.applicationId, dir),
-      _ => graft.operators.IvfPq.loadKnobs(s, dir))
-
-  private val tokenTables = new ConcurrentHashMap[(String, String), DataFrame]()
+    memo(s, "ivfpq_knobs", dir)(graft.operators.IvfPq.loadKnobs(s, dir))
 
   def tokenTable(s: SparkSession, dir: String): DataFrame =
-    tokenTables.computeIfAbsent((s.sparkContext.applicationId, dir),
-      _ => graft.operators.TokenEmbeddingTable.load(s, dir))
+    memo(s, "token_table", dir)(graft.operators.TokenEmbeddingTable.load(s, dir))
 
-  /** Scoped / per-grant BM25 corpus statistics, priced ONCE per
-    * (session, index dir, grant tag) and re-entering every plan as a
-    * LOCAL relation (r21): the operators expose exactly this hoist —
-    * `servedTopKScopedWith` / `servedTopKPerGrantWith` exist because
-    * "a long-lived consumer session computes [the scoped stats] ONCE
-    * and serves every call" (their scaladoc, VERDICT r19 #3) — but the
-    * b14/b15 entries still re-ran the full docs-store pass inside
-    * every execution. The grant is frozen per entry (a literal scope /
-    * grants table over an immutable per-session artifact), so the
-    * stats rows are constants of (artifact, grant); they collect once
-    * (ledger-reported via CacheFills) and every later use costs zero
-    * jobs. Callers supply the tag naming the grant; a NEW grant means
-    * a new tag.
-    */
   /** Memoized parquet READ of a per-session IMMUTABLE store (r21): a
     * fresh `spark.read.parquet(dir)` re-lists the store's files on
     * every call — for the bucket/cell-PARTITIONED serving stores (64
@@ -73,21 +47,29 @@ private[queries] object ServingCache {
     * (the Bm25 postings store is deliberately NOT routed through this:
     * its growth contract lets appends land between serves).
     */
-  private val parquets = new ConcurrentHashMap[(String, String), DataFrame]()
-
   def parquetDf(s: SparkSession, path: String): DataFrame =
-    parquets.computeIfAbsent((s.sparkContext.applicationId, path),
-      _ => s.read.parquet(path))
+    memo(s, "parquet", path)(s.read.parquet(path))
 
-  private val scopedStats = new ConcurrentHashMap[(String, String, String), DataFrame]()
-
-  def bm25ScopedStats(s: SparkSession, dir: String, tag: String,
-      dataset: String, fill: () => DataFrame): DataFrame =
-    scopedStats.computeIfAbsent((s.sparkContext.applicationId, dir, tag), { _ =>
-      graft.CacheFills.timed(s"bm25_stats_$tag", dataset) {
-        val df = fill()
-        val rows = df.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
-      }
-    })
+  /** Scoped / per-grant BM25 corpus statistics of the dataset's b4
+    * index, priced ONCE per (session, dataset, grant tag) and
+    * re-entering every plan as a LOCAL relation (r21): the operators
+    * expose exactly this hoist — `servedTopKScopedWith` /
+    * `servedTopKPerGrantWith` exist because "a long-lived consumer
+    * session computes [the scoped stats] ONCE and serves every call"
+    * (their scaladoc, VERDICT r19 #3) — but the b14/b15 entries still
+    * re-ran the full docs-store pass inside every execution. The grant
+    * is frozen per entry (a literal scope / grants table over an
+    * immutable per-session artifact), so the stats rows are constants
+    * of (artifact, grant); they collect once (ledger-reported as
+    * `bm25_stats_<tag>@dataset`) and every later use costs zero jobs.
+    * Callers supply the tag naming the grant; a NEW grant means a new
+    * tag.
+    */
+  def bm25ScopedStats(s: SparkSession, tag: String, dataset: String,
+      fill: () => DataFrame): DataFrame =
+    graft.SessionStore.fill(s, s"bm25_stats_$tag", dataset) {
+      val df = fill()
+      val rows = df.collect()
+      s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+    }
 }

@@ -140,22 +140,16 @@ object SimilarityQueries extends QueryPack {
     * memoization: the driver's testdata is generated once and read-only.
     * If files under `d` were regenerated mid-application, n5 would
     * serve the stale index while `exact` reads fresh data (ADVICE r8);
-    * a mutable-corpus deployment must key this cache by a content
+    * a mutable-corpus deployment must key this store by a content
     * fingerprint (footer row count + max file mtime) or drop it.
     */
-  private val ivfDirCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   private def servedIvfDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    ivfDirCache.computeIfAbsent((s.sparkContext.applicationId, d), { _ =>
-      graft.CacheFills.timed("ivf_n5_store", d) {
-      val dir = graft.Artifacts.tempArtifactDir("graft_ivf_n5")
+    graft.SessionStore.dir(s, "ivf_n5_store", d) { dir =>
       graft.operators.IvfIndex.save(graft.operators.IvfIndex.build(
         Tables.load(s, d, "embeddings"), nlist = 16,
         knownN = Tables.rowCount(s, d, "embeddings")), dir)
       dir
-      }
-    })
+    }
 
   val queries: Seq[Q] = Seq(
 
@@ -765,7 +759,7 @@ object SimilarityQueries extends QueryPack {
     // n26's chain SERVED FROM THE PERSISTED ARTIFACT — the missing
     // lifecycle step: the 256-cell coarse + residual fits and the
     // encoded corpus are saved ONCE (`IvfPq.save` — the first entry to
-    // touch the store pays it, the sqDirCache discipline), and the
+    // touch the store pays it, a `SessionStore.dir` fill), and the
     // serve path LOADS model state + reads the cell-partitioned codes
     // and the exact vector store from disk — zero fit jobs
     // (IvfPqArtifactSpec counts them), which is what lets a serving
@@ -892,67 +886,47 @@ object SimilarityQueries extends QueryPack {
   )
 
   /** One PQ fit per (session, dataset) — m·k·(dims/m) = dims·k longs,
-    * driver-held; the kmCache discipline.
+    * driver-held in the `SessionStore`.
     */
-  private val pqCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Seq[Seq[Array[Long]]]]()
-
   private def fittedBooks(s: org.apache.spark.sql.SparkSession,
       d: String): Seq[Seq[Array[Long]]] =
-    pqCache.computeIfAbsent((s.sparkContext.applicationId, d), { _ =>
-      graft.CacheFills.timed("pq_books", d) {
+    graft.SessionStore.fill(s, "pq_books", d) {
       graft.operators.PqIndex.fit(
         Tables.load(s, d, "embeddings"), PqM, PqK, PqIters, KmDims)
-      }
-    })
+    }
 
   /** One residual-codebook fit per (session, dataset), over the coarse
-    * cells of `fittedCents` — the kmCache discipline.
+    * cells of `fittedCents`, driver-held in the `SessionStore`.
     */
-  private val ivfpqCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Seq[Seq[Array[Long]]]]()
-
   private def ivfpqBooks(s: org.apache.spark.sql.SparkSession,
       d: String): Seq[Seq[Array[Long]]] =
-    ivfpqCache.computeIfAbsent((s.sparkContext.applicationId, d), { _ =>
-      graft.CacheFills.timed("ivfpq_books", d) {
+    graft.SessionStore.fill(s, "ivfpq_books", d) {
       graft.operators.IvfPq.fit(
         Tables.load(s, d, "embeddings"), fittedCents(s, d),
         PqM, PqK, PqIters, KmDims)
-      }
-    })
+    }
 
   /** One large-nlist coarse fit + residual-book fit per (session,
-    * dataset) — the kmCache discipline at the n26 shape (nlist·dims
-    * longs + m·k·sub longs, trivially driver-held).
+    * dataset), driver-held in the `SessionStore` at the n26 shape
+    * (nlist·dims longs + m·k·sub longs).
     */
-  private val nlCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (Seq[Array[Long]], Seq[Seq[Array[Long]]])]()
-
   private def largeNlist(s: org.apache.spark.sql.SparkSession,
       d: String): (Seq[Array[Long]], Seq[Seq[Array[Long]]]) =
-    nlCache.computeIfAbsent((s.sparkContext.applicationId, d), { _ =>
-      graft.CacheFills.timed("large_nlist_fits", d) {
+    graft.SessionStore.fill(s, "large_nlist_fits", d) {
       val emb = Tables.load(s, d, "embeddings")
       val cents = graft.operators.KMeans.fit(emb, NlK, NlIters, KmDims)
       (cents,
         graft.operators.IvfPq.fit(emb, cents, PqM, PqK, PqIters, KmDims))
-      }
-    })
+    }
 
   /** One persisted large-nlist IVF-PQ artifact per (session, dataset) —
-    * the sqDirCache discipline: the first toucher pays the fit (shared
+    * a `SessionStore.dir` fill: the first toucher pays the fit (shared
     * with n26 via `largeNlist`) plus the encode+write; every later
     * serve call only loads.
     */
-  private val ivfPqDirCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   private def servedIvfPqDir(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    ivfPqDirCache.computeIfAbsent((s.sparkContext.applicationId, d), { _ =>
-      graft.CacheFills.timed("ivfpq_n27_store", d) {
-      val dir = graft.Artifacts.tempArtifactDir("graft_ivfpq_n27")
+    graft.SessionStore.dir(s, "ivfpq_n27_store", d) { dir =>
       val (cents, books) = largeNlist(s, d)
       // the same pre-encode spread as n26: packed assignment prices
       // nlist·dims lambda steps per row, and the synthetic table is
@@ -962,56 +936,37 @@ object SimilarityQueries extends QueryPack {
           .repartition(s.sparkContext.defaultParallelism),
         dir, cents, books)
       dir
-      }
-    })
+    }
 
-  /** One persisted PQ store per (session, dataset) — the sqDirCache
-    * discipline.
+  /** One persisted PQ store per (session, dataset) — a
+    * `SessionStore.dir` fill.
     */
-  private val pqDirCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   private def servedPqDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    pqDirCache.computeIfAbsent((s.sparkContext.applicationId, d), { _ =>
-      graft.CacheFills.timed("pq_n18_store", d) {
-      val dir = graft.Artifacts.tempArtifactDir("graft_pq_n18")
+    graft.SessionStore.dir(s, "pq_n18_store", d) { dir =>
       graft.operators.PqIndex.save(
         Tables.load(s, d, "embeddings"), dir, PqM, PqK, PqIters, KmDims)
       dir
-      }
-    })
+    }
 
   /** One k-means fit per (session, dataset) — the centroids are k·dims
-    * longs, trivially driver-held; same immutable-dataset assumption as
-    * the IVF/SQ dir caches.
+    * longs, trivially driver-held in the `SessionStore` (same
+    * immutable-dataset assumption as every entry there).
     */
-  private val kmCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Seq[Array[Long]]]()
-
   private def fittedCents(s: org.apache.spark.sql.SparkSession, d: String): Seq[Array[Long]] =
-    kmCache.computeIfAbsent((s.sparkContext.applicationId, d), { _ =>
-      graft.CacheFills.timed("kmeans_cents", d) {
+    graft.SessionStore.fill(s, "kmeans_cents", d) {
       graft.operators.KMeans.fit(
         Tables.load(s, d, "embeddings"), KmK, KmIters, KmDims)
-      }
-    })
+    }
 
-  /** One persisted SQ store per (session, dataset) — n5's dir-cache
-    * discipline (temp dir, deleted on JVM exit, immutable-dataset
-    * assumption documented there).
+  /** One persisted SQ store per (session, dataset) — a
+    * `SessionStore.dir` fill (temp dir, deleted on JVM exit).
     */
-  private val sqDirCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   private def servedSqDir(s: org.apache.spark.sql.SparkSession, d: String): String =
-    sqDirCache.computeIfAbsent((s.sparkContext.applicationId, d), { _ =>
-      graft.CacheFills.timed("sq_n10_store", d) {
-      val dir = graft.Artifacts.tempArtifactDir("graft_sq_n10")
+    graft.SessionStore.dir(s, "sq_n10_store", d) { dir =>
       graft.operators.Quantization.saveSq(
         Tables.load(s, d, "embeddings"), dir)
       dir
-      }
-    })
+    }
 
   /** DuckDB replay of the ENTIRE SQ chain (codebook ranks → encode →
     * pack → unpack → reconstruct → ADC cosine → top-k), shared verbatim

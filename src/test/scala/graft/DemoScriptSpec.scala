@@ -31,6 +31,16 @@ class DemoScriptSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
   private val scriptPath = "/root/reference/dp_demo.sql"
 
+  /** A reference script's text; a missing mount fails the test with one
+    * line naming it (the replay cannot run without the shipped file).
+    */
+  private def referenceScript(path: java.nio.file.Path): String = {
+    if (!Files.isRegularFile(path))
+      fail(s"reference script $path is missing: mount the reference's " +
+        s"dp_setup.sql and dp_demo.sql under ${path.getParent}")
+    new String(Files.readAllBytes(path), "UTF-8")
+  }
+
   private def asAccount[T](acct: String)(body: => T): T = {
     val prior = spark.conf.getOption(GraftFunctions.AccountConfKey)
     spark.conf.set(GraftFunctions.AccountConfKey, acct)
@@ -64,7 +74,9 @@ class DemoScriptSpec extends AnyFunSuite {
   }
 
   test("dp_demo.sql replays verbatim, all statements, with golden counts") {
-    val text = new String(Files.readAllBytes(Paths.get(scriptPath)), "UTF-8")
+    val demoPath = Paths.get(scriptPath)
+    val setupText = referenceScript(demoPath.resolveSibling("dp_setup.sql"))
+    val text = referenceScript(demoPath)
     val stmts = DemoScript.splitStatements(text)
     assert(stmts.length === 92, s"splitter found ${stmts.length} statements")
 
@@ -87,8 +99,6 @@ class DemoScriptSpec extends AnyFunSuite {
     // the same session (all 25 statements, including the reference's
     // own `create database it not exists` typo and the $$-quoted
     // JavaScript procedure bodies)
-    val setupText = new String(
-      Files.readAllBytes(Paths.get("/root/reference/dp_setup.sql")), "UTF-8")
     val setupStmts = DemoScript.splitStatements(setupText)
     assert(setupStmts.length === 25,
       s"setup splitter found ${setupStmts.length} statements")
