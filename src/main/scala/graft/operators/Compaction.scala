@@ -89,12 +89,8 @@ object Compaction {
     val rows = spark.read.option("basePath", dir)
       .parquet(hot.map(v => s"$dir/$partitionCol=$v"): _*)
     val deduped = if (dropExactDuplicates) rows.distinct() else rows
-    deduped
-      .repartition(col(partitionCol))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCol)
-      .parquet(dir)
+    graft.BatchSink.overwritePartitions(
+      deduped.repartition(col(partitionCol)), dir, partitionCol)
     hot
   }
 
@@ -171,12 +167,8 @@ object Compaction {
       val markers = (folded ++ candidates).toSeq.sorted.toDF("idx")
         .select(lit(-1).cast("int").as("r"), col("idx").cast("long").as("idx"),
           lit(0L).as("c"))
-      cells.unionByName(markers)
-        .withColumn("_batch_id", lit(BaseId))
-        .repartition(1)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch_id").parquet(dir)
+      graft.BatchSink.writeBatch(cells.unionByName(markers).repartition(1),
+        dir, BaseId)
     }
     (candidates ++ leftover).distinct.foreach { id =>
       fs.delete(new Path(path, s"_batch_id=$id"), true); ()

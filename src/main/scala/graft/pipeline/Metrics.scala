@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
   * (dp_demo.sql:52,132).
   *
   * Maintained by the pipeline's foreachBatch: each micro-batch writes its
-  * own `_batch_id=` partition with dynamic partition overwrite, so a
+  * own `_batch_id=` partition through `BatchSink.writeBatch`, so a
   * replayed batch overwrites its own metrics instead of duplicating them.
   * Row volume is O(files + tasks) per batch — negligible at any scale.
   */
@@ -61,15 +61,4 @@ object Metrics {
     Seq((name, state, scheduled, completed, rows))
       .toDF("name", "state", "scheduled_time", "completed_time", "rows_affected")
   }
-
-  /** Append a metrics slice under its `_batch_id` partition; dynamic
-    * overwrite makes replay idempotent.
-    */
-  def writeBatchPartition(df: DataFrame, path: String, batchId: Long): Unit =
-    df.withColumn("_batch_id", lit(batchId))
-      .repartition(1) // metrics slices are tiny; avoid 1-row files per core
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_batch_id")
-      .parquet(path)
 }

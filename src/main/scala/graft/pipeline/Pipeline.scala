@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.BatchSink
+
 /** Directory layout for one pipeline instance — the analogue of the
   * reference's `snowflake_demo` database (raw + modelled schemas,
   * dp_setup.sql:137-175) plus our operational-metadata tables.
@@ -40,7 +42,7 @@ final case class PipelinePaths(root: String) {
   *     dimension table; state lives in the table itself.
   *
   * Crash-replay idempotence (SURVEY §7.4 #1): fact + metrics writes go
-  * to a `_batch_id=` partition with dynamic partition overwrite (replay
+  * through `BatchSink.writeBatch` to a `_batch_id=` partition (replay
   * overwrites, never duplicates); dimension appends are anti-joined
   * against the already-committed table.
   */
@@ -75,27 +77,19 @@ final class Pipeline(
       val scheduled = clock.now()
 
       // pipe: append the new raw documents (COPY INTO trips_raw).
-      batch.withColumn("_batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch_id")
-        .parquet(paths.rawTrips)
+      BatchSink.writeBatch(batch, paths.rawTrips, batchId)
 
-      // copy_history: one row per file in this batch.
-      Metrics.writeBatchPartition(
-        Metrics.copyHistoryRows(batch, paths.stage, clock),
+      // copy_history: one row per file in this batch. Metrics slices
+      // are tiny; one partition avoids 1-row files per core.
+      BatchSink.writeBatch(
+        Metrics.copyHistoryRows(batch, paths.stage, clock).repartition(1),
         paths.copyHistory, batchId)
 
       val nRaw = batch.count()
 
       // push_trips (dp_setup.sql:188-203)
       val shred = shredTrips(batch)
-      if (nRaw > 0)
-        shred.withColumn("_batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch_id")
-          .parquet(paths.trips)
+      if (nRaw > 0) BatchSink.writeBatch(shred, paths.trips, batchId)
 
       // push_programs (dp_setup.sql:207-219)
       val newProgs =
@@ -142,21 +136,19 @@ final class Pipeline(
       }.reduce(_ union _)
         .union(tasks.map(t => Metrics.taskHistoryRow(
           spark, t, "SCHEDULED", next, null, 0L)).reduce(_ union _))
-      Metrics.writeBatchPartition(th, paths.taskHistory, batchId)
+      BatchSink.writeBatch(th.repartition(1), paths.taskHistory, batchId)
     } finally batch.unpersist()
   }
 
   /** Start the pipe: continuous file ingest from the stage. */
-  def start(trigger: Trigger = Trigger.ProcessingTime(s"$taskIntervalSec seconds")): StreamingQuery =
-    spark.readStream
-      .text(paths.stage)
+  def start(trigger: Trigger = Trigger.ProcessingTime(s"$taskIntervalSec seconds")): StreamingQuery = {
+    val files = spark.readStream.text(paths.stage)
       .select(col("value").as("v"), col("_metadata.file_path").as("_src_file"))
-      .writeStream
+    BatchSink.stream(files, paths.checkpoint)(applyBatch)
       .queryName("trips_pipe")
-      .option("checkpointLocation", paths.checkpoint)
       .trigger(trigger)
-      .foreachBatch((b: DataFrame, id: Long) => applyBatch(b, id))
       .start()
+  }
 
   /** Drain everything currently in the stage, then stop — the test-mode
     * trigger (SURVEY §2.10 T3).

@@ -12,6 +12,15 @@ object Stage {
   private def fs(spark: SparkSession, dir: String): FileSystem =
     FileSystem.get(new Path(dir).toUri, spark.sparkContext.hadoopConfiguration)
 
+  /** Whether the stage holds a `.json` file, so a `*.json` glob read
+    * has something to match.
+    */
+  private def hasJsonFiles(spark: SparkSession, stageDir: String): Boolean = {
+    val f = fs(spark, stageDir)
+    f.exists(new Path(stageDir)) &&
+      f.listStatus(new Path(stageDir)).exists(s => s.isFile && s.getPath.getName.endsWith(".json"))
+  }
+
   /** S4 — `list @stage` (dp_setup.sql:25, dp_demo.sql:36): name, size,
     * last_modified. Driver-side listing like Snowflake's; at cloud scale
     * this is one LIST call per prefix, not a data scan.
@@ -35,13 +44,8 @@ object Stage {
     */
   def scanDollar1(spark: SparkSession, stageDir: String): DataFrame = {
     import spark.implicits._
-    val hasFiles = {
-      val f = fs(spark, stageDir)
-      f.exists(new Path(stageDir)) &&
-        f.listStatus(new Path(stageDir)).exists(s => s.isFile && s.getPath.getName.endsWith(".json"))
-    }
     val raw =
-      if (hasFiles) spark.read.textFile(s"$stageDir/*.json").toDF("raw")
+      if (hasJsonFiles(spark, stageDir)) spark.read.textFile(s"$stageDir/*.json").toDF("raw")
       else Seq.empty[String].toDF("raw")
     raw.select(try_parse_json(col("raw")).as("$1"))
   }
@@ -58,12 +62,7 @@ object Stage {
     */
   def scanRelation(spark: SparkSession, stageDir: String): DataFrame = {
     import spark.implicits._
-    val hasFiles = {
-      val f = fs(spark, stageDir)
-      f.exists(new Path(stageDir)) &&
-        f.listStatus(new Path(stageDir)).exists(s => s.isFile && s.getPath.getName.endsWith(".json"))
-    }
-    if (hasFiles)
+    if (hasJsonFiles(spark, stageDir))
       spark.read.textFile(s"$stageDir/*.json")
         .select(try_parse_json(col("value")).as("$1"),
           col("_metadata.file_name").as("metadata$filename"))

@@ -2,8 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
+import graft.BatchSink
 import graft.operators.IvfIndex
 
 /** STREAMING ANN serving over a persisted IVF index — the online half of
@@ -21,9 +22,9 @@ import graft.operators.IvfIndex
   * stream definition (centroids are nlist driver-side rows; the
   * assignment is a lazy parquet relation), not per batch.
   *
-  * Crash replay is idempotent: results land in `_batch_id` partitions
-  * with dynamic partition overwrite (the `Pipeline.applyBatch` scheme) —
-  * a replayed batch overwrites its own partition, never duplicates it.
+  * Crash replay is idempotent: results land through
+  * `BatchSink.writeBatch` — a replayed batch overwrites its own
+  * `_batch_id` partition, never duplicates it.
   *
   * Single-writer contract: do not `appendToSaved` into the index while
   * a serving stream is up — the loaded relation's file listing is
@@ -39,23 +40,16 @@ object AnnStream {
   def serve(queries: DataFrame, indexDir: String, outDir: String,
       checkpointDir: String, k: Int, nprobe: Int = 4): DataStreamWriter[Row] = {
     val idx = IvfIndex.load(queries.sparkSession, indexDir)
-    queries.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // one row per query_id: an at-least-once source can deliver a
-        // query twice in one batch, and a duplicated query row DOUBLES
-        // that query's candidate set — row_number then ranks each true
-        // neighbour twice and the top-k holds only ⌈k/2⌉ distinct
-        // results (the same set-semantics contract searchPrunedDf
-        // enforces on id batches)
-        IvfIndex.searchPrunedVecsDf(idx, batch.dropDuplicates("query_id"),
-            k, nprobe, excludeSelf = false)
-          .withColumn("_batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch_id").parquet(outDir)
-        ()
-      }
+    BatchSink.stream(queries, checkpointDir) { (batch, batchId) =>
+      // one row per query_id: an at-least-once source can deliver a
+      // query twice in one batch, and a duplicated query row DOUBLES
+      // that query's candidate set — row_number then ranks each true
+      // neighbour twice and the top-k holds only ⌈k/2⌉ distinct
+      // results (the same set-semantics contract searchPrunedDf
+      // enforces on id batches)
+      BatchSink.writeBatch(IvfIndex.searchPrunedVecsDf(idx, batch.dropDuplicates("query_id"),
+          k, nprobe, excludeSelf = false),
+        outDir, batchId)
+    }
   }
 }

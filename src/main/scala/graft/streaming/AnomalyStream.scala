@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.BatchSink
+
 /** STREAMING volume-anomaly detection — the in-flight twin of the e11
   * batch entry, built on the SAME partial-partition machine as the
   * count-min / histogram streams (SketchStream): daily event counts
@@ -28,21 +30,14 @@ object AnomalyStream {
   def dailyCountStream(events: DataFrame, outDir: String,
       checkpointDir: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.groupBy(col("event_type").as("g"),
-            expr("CAST(datediff(date_trunc('day', ts), DATE '1970-01-01') AS BIGINT)")
-              .as("idx"))
-          .agg(count(lit(1)).as("c"))
-          .select(col("g"), lit(0).as("r"), col("idx"), col("c"))
-          .withColumn("_batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("g", "_batch_id").parquet(outDir)
-        ()
-      }
+    BatchSink.stream(events, checkpointDir) { (batch, batchId) =>
+      val daily = batch.groupBy(col("event_type").as("g"),
+          expr("CAST(datediff(date_trunc('day', ts), DATE '1970-01-01') AS BIGINT)")
+            .as("idx"))
+        .agg(count(lit(1)).as("c"))
+        .select(col("g"), lit(0).as("r"), col("idx"), col("c"))
+      BatchSink.writeBatch(daily, outDir, batchId, "g")
+    }
 
   /** Current folded daily counts: (event_type, idx, c). One
     * partitioned read of the whole grouped store

@@ -2,8 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
+import graft.BatchSink
 import graft.operators.BpeTrainer
 
 /** STREAMING BPE tokenization over a frozen merge list — the online
@@ -22,8 +23,8 @@ import graft.operators.BpeTrainer
   * pure). Retraining the merges is a restart (the single-writer
   * contract; t23's vocab-growth curve is the monitor).
   *
-  * Crash replay is idempotent via the `_batch_id` dynamic-overwrite
-  * scheme; duplicate doc_ids within a batch collapse to one row.
+  * Crash replay is idempotent via `BatchSink.writeBatch`; duplicate
+  * doc_ids within a batch collapse to one row.
   */
 object BpeStream {
 
@@ -37,18 +38,11 @@ object BpeStream {
   def tokenCounts(docs: DataFrame, merges: Seq[(String, String)],
       bpePat: String, outDir: String, checkpointDir: String,
       byteLevel: Boolean = false): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        BpeTrainer.docTokenCounts(
-            batch.dropDuplicates("doc_id"), merges, bpePat, byteLevel)
-          .withColumn("_batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch_id").parquet(outDir)
-        ()
-      }
+    BatchSink.stream(docs, checkpointDir) { (batch, batchId) =>
+      BatchSink.writeBatch(BpeTrainer.docTokenCounts(
+          batch.dropDuplicates("doc_id"), merges, bpePat, byteLevel),
+        outDir, batchId)
+    }
 
   /** The ingest-time twin of `BpeTrainer.docTokenIds` — continuous
     * TOKENIZATION, not just pricing: every arriving document lands as
@@ -59,23 +53,16 @@ object BpeStream {
     * against one map literal, per-row pure — so stream/batch parity is
     * bit-level under any chopping (BpeStreamSpec pins per-doc id
     * equality), and the byte-level alphabet is implied: ids only exist
-    * under the byte vocabulary. Crash replay is idempotent via the
-    * `_batch_id` dynamic-overwrite scheme; duplicate doc_ids within a
-    * batch collapse to one row.
+    * under the byte vocabulary. Crash replay is idempotent via
+    * `BatchSink.writeBatch`; duplicate doc_ids within a batch collapse
+    * to one row.
     */
   def tokenIds(docs: DataFrame, merges: Seq[(String, String)],
       vocab: Seq[(String, Int)], bpePat: String, outDir: String,
       checkpointDir: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        BpeTrainer.docTokenIdsWith(
-            batch.dropDuplicates("doc_id"), merges, vocab, bpePat)
-          .withColumn("_batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch_id").parquet(outDir)
-        ()
-      }
+    BatchSink.stream(docs, checkpointDir) { (batch, batchId) =>
+      BatchSink.writeBatch(BpeTrainer.docTokenIdsWith(
+          batch.dropDuplicates("doc_id"), merges, vocab, bpePat),
+        outDir, batchId)
+    }
 }

@@ -2,8 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
+import graft.BatchSink
 import graft.operators.KMeans
 
 /** STREAMING cluster assignment over a frozen k-means fit — the online
@@ -21,11 +22,11 @@ import graft.operators.KMeans
   * is per-row pure. The centroids are frozen at stream definition
   * (retrain → restart, the AnnStream single-writer contract).
   *
-  * Crash replay is idempotent: the `_batch_id` dynamic-overwrite
-  * scheme (`Pipeline.applyBatch`) — a replayed batch overwrites its own
-  * partition. Duplicate vec_ids within a batch collapse to one row
-  * (at-least-once source contract; assignment is deterministic so the
-  * duplicates would have carried identical values anyway).
+  * Crash replay is idempotent: `BatchSink.writeBatch` — a replayed
+  * batch overwrites its own `_batch_id` partition. Duplicate vec_ids
+  * within a batch collapse to one row (at-least-once source contract;
+  * assignment is deterministic so the duplicates would have carried
+  * identical values anyway).
   */
 object ClusterStream {
 
@@ -65,57 +66,48 @@ object ClusterStream {
   def route(vecs: DataFrame, cents: Seq[Array[Long]], outDir: String,
       checkpointDir: String,
       monitorDir: Option[String] = None): DataStreamWriter[Row] =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // persist (not localCheckpoint): the assignment is reused by
-        // the route write and the monitor aggregate WITHIN this batch
-        // only, so a cache the finally-block releases is the right
-        // lifetime — a long-running monitored stream must not
-        // accumulate per-batch blocks in executor storage.
-        val asg = KMeans
-          .assign(KMeans.quantized(batch.dropDuplicates("vec_id")), cents)
-          .persist()
-        try {
-          asg.withColumn("_batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id").parquet(outDir)
-          monitorDir.foreach { m =>
-            val spark = batch.sparkSession
-            import spark.implicits._
-            val base = spark.read.parquet(s"$m/baseline").collect()(0)
-            val baseMean = base.getDouble(1)
-            val r = asg.agg(count(lit(1)).as("n"), avg(col("dist2")).as("d"))
-              .collect()(0)
-            val n = r.getLong(0)
-            val d = if (r.isNullAt(1)) 0.0 else r.getDouble(1)
-            val ratio = if (baseMean > 0.0) d / baseMean else 0.0
-            // A degenerate baseline (mean_dist2 = 0: tiny or
-            // perfectly-fit corpus) must not mask drift forever — any
-            // batch with positive mean distance against a zero
-            // denominator IS drift, so it flags directly (ratio stays
-            // 0.0 as the "denominator was degenerate" marker; the flag
-            // carries the signal, matching the spirit of IvfIndex's
-            // baseDist > 0 guard without dropping the row).
-            val flagged =
-              if (baseMean > 0.0)
-                ratio > graft.operators.IvfIndex.DriftRetrainRatio
-              else d > 0.0
-            // replay-idempotent like the route write itself: the log is
-            // keyed by seq = batchId, so a crash-replayed batch replaces
-            // its own row instead of appending a duplicate
-            Seq((batchId, n, d, ratio, flagged))
-              .toDF("seq", "n", "mean_dist2", "ratio", "flagged")
-              .withColumn("_seq", col("seq"))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("_seq").parquet(s"$m/drift_log")
-          }
-        } finally { asg.unpersist(); () }
-        ()
-      }
+    BatchSink.stream(vecs, checkpointDir) { (batch, batchId) =>
+      // persist (not localCheckpoint): the assignment is reused by
+      // the route write and the monitor aggregate WITHIN this batch
+      // only, so a cache the finally-block releases is the right
+      // lifetime — a long-running monitored stream must not
+      // accumulate per-batch blocks in executor storage.
+      val asg = KMeans
+        .assign(KMeans.quantized(batch.dropDuplicates("vec_id")), cents)
+        .persist()
+      try {
+        BatchSink.writeBatch(asg, outDir, batchId)
+        monitorDir.foreach { m =>
+          val spark = batch.sparkSession
+          import spark.implicits._
+          val base = spark.read.parquet(s"$m/baseline").collect()(0)
+          val baseMean = base.getDouble(1)
+          val r = asg.agg(count(lit(1)).as("n"), avg(col("dist2")).as("d"))
+            .collect()(0)
+          val n = r.getLong(0)
+          val d = if (r.isNullAt(1)) 0.0 else r.getDouble(1)
+          val ratio = if (baseMean > 0.0) d / baseMean else 0.0
+          // A degenerate baseline (mean_dist2 = 0: tiny or
+          // perfectly-fit corpus) must not mask drift forever — any
+          // batch with positive mean distance against a zero
+          // denominator IS drift, so it flags directly (ratio stays
+          // 0.0 as the "denominator was degenerate" marker; the flag
+          // carries the signal, matching the spirit of IvfIndex's
+          // baseDist > 0 guard without dropping the row).
+          val flagged =
+            if (baseMean > 0.0)
+              ratio > graft.operators.IvfIndex.DriftRetrainRatio
+            else d > 0.0
+          // replay-idempotent like the route write itself: the log is
+          // keyed by seq = batchId, so a crash-replayed batch replaces
+          // its own row instead of appending a duplicate
+          val record = Seq((batchId, n, d, ratio, flagged))
+            .toDF("seq", "n", "mean_dist2", "ratio", "flagged")
+            .withColumn("_seq", col("seq"))
+          BatchSink.overwritePartitions(record, s"$m/drift_log", "_seq")
+        }
+      } finally asg.unpersist()
+    }
 
   /** Latest drift record, `None` until the first monitored batch. */
   def driftStatus(spark: org.apache.spark.sql.SparkSession,

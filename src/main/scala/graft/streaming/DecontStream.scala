@@ -2,8 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
+import graft.BatchSink
 import graft.operators.DedupOps
 
 /** STREAMING decontamination — `DedupOps.crossSplitOverlap` for the
@@ -58,35 +59,29 @@ object DecontStream {
   }
 
   /** The streaming filter: decisions land in `_batch_id` partitions
-    * (dynamic overwrite — crash replay overwrites, never duplicates).
+    * through `BatchSink.writeBatch` (crash replay overwrites, never
+    * duplicates).
     */
   def decontaminateFilter(docs: DataFrame, indexDir: String, outDir: String,
       checkpointDir: String, idCol: String = "doc_id",
       textCol: String = "text", n: Int = 8): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val g = grams(batch, idCol, textCol, n).localCheckpoint()
-        // the batch's gram buckets bound the index read: ≤ batch-gram
-        // count of the 64 bucket directories are listed at all
-        val touched = g.select("_bucket").distinct()
-          .collect().map(_.getInt(0)).toSeq
-        val hits =
-          if (touched.isEmpty) g.select(col("doc_id"), lit(0L).as("n_hits")).limit(0)
-          else spark.read.parquet(indexDir)
-            .filter(col("_bucket").isin(touched: _*))
-            .join(g, Seq("_bucket", "shingle"))
-            .groupBy("doc_id").agg(count(lit(1)).as("n_hits"))
-        batch.select(col(idCol).cast("long").as("doc_id"))
-          .join(hits, Seq("doc_id"), "left")
-          .select(col("doc_id"), coalesce(col("n_hits"), lit(0L)).as("n_hits"))
-          .withColumn("clean", col("n_hits") === 0L)
-          .withColumn("_batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch_id").parquet(outDir)
-        ()
-      }
+    BatchSink.stream(docs, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val g = grams(batch, idCol, textCol, n).localCheckpoint()
+      // the batch's gram buckets bound the index read: ≤ batch-gram
+      // count of the 64 bucket directories are listed at all
+      val touched = g.select("_bucket").distinct()
+        .collect().map(_.getInt(0)).toSeq
+      val hits =
+        if (touched.isEmpty) g.select(col("doc_id"), lit(0L).as("n_hits")).limit(0)
+        else spark.read.parquet(indexDir)
+          .filter(col("_bucket").isin(touched: _*))
+          .join(g, Seq("_bucket", "shingle"))
+          .groupBy("doc_id").agg(count(lit(1)).as("n_hits"))
+      val decisions = batch.select(col(idCol).cast("long").as("doc_id"))
+        .join(hits, Seq("doc_id"), "left")
+        .select(col("doc_id"), coalesce(col("n_hits"), lit(0L)).as("n_hits"))
+        .withColumn("clean", col("n_hits") === 0L)
+      BatchSink.writeBatch(decisions, outDir, batchId)
+    }
 }

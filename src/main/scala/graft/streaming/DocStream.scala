@@ -3,8 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
+import graft.BatchSink
 import graft.operators.DedupOps
 
 /** STREAMING near-duplicate dedup over a document stream — the in-flight
@@ -52,7 +53,7 @@ import graft.operators.DedupOps
   * batch, never the corpus — docs without collisions are kept
   * distributed-side); that bound is the same class as d4's pair
   * collection. Crash replay: decisions land in `_batch_id` partitions
-  * with dynamic overwrite (idempotent, `Pipeline.applyBatch`'s scheme);
+  * through `BatchSink.writeBatch` (idempotent);
   * a replayed index append can duplicate entries, which is harmless —
   * candidates are de-duplicated per (new, old) pair, and the
   * cross-batch match EXCLUDES self-pairs, so a replayed batch that
@@ -233,81 +234,74 @@ object DocStream {
       nBuckets: Int = 64, maxCandidates: Int = 64): DataStreamWriter[Row] = {
     require(threshold <= 1.0,
       "threshold > 1 matches nothing and would break exact-dup collapse")
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        // one signature pass per batch; localCheckpoint because it feeds
-        // the collapse, the decisions join, and (via reps) everything else
-        val sigs = signatures(batch, idCol, textCol, n, k).localCheckpoint()
-        // duplicate-storm safety: only one rep per distinct signature
-        // reaches banding, the index join, and the driver fold
-        val (repSigs0, members) = collapse(sigs)
-        val repSigs = repSigs0.localCheckpoint()
-        val entries = bandEntries(repSigs, k, bands, nBuckets).localCheckpoint()
+    BatchSink.stream(docs, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // one signature pass per batch; localCheckpoint because it feeds
+      // the collapse, the decisions join, and (via reps) everything else
+      val sigs = signatures(batch, idCol, textCol, n, k).localCheckpoint()
+      // duplicate-storm safety: only one rep per distinct signature
+      // reaches banding, the index join, and the driver fold
+      val (repSigs0, members) = collapse(sigs)
+      val repSigs = repSigs0.localCheckpoint()
+      val entries = bandEntries(repSigs, k, bands, nBuckets).localCheckpoint()
 
-        // cross-batch matches: smallest INDEXED (= earlier kept) doc
-        // sharing a band bucket at estimate >= threshold — the read is
-        // partition-pruned to the batch's own buckets
-        val indexPath = new org.apache.hadoop.fs.Path(indexDir)
-        val fs = indexPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val touched = entries.select("_bucket").distinct()
-          .collect().map(_.getInt(0)).toSeq
-        val crossMatch: Map[Long, Long] =
-          if (fs.exists(indexPath) && touched.nonEmpty) {
-            spark.read.schema(entries.schema).parquet(indexDir)
-              .filter(col("_bucket").isin(touched: _*))
-              .select(col("doc_id").as("old_id"), col("sig").as("old_sig"),
-                col("band_key"))
-              .join(entries.select(col("doc_id").as("new_id"), col("sig"),
-                col("band_key")), Seq("band_key"))
-              // a doc never matches ITSELF: on crash-replay (index append
-              // landed, checkpoint commit did not) the re-executed batch
-              // finds its own kept docs' entries in the index at estimate
-              // 1.0 — without this guard every previously-kept doc would
-              // be rewritten as dropped-matching-itself, permanently
-              // corrupting the replayed decisions (review r10). The cost
-              // (r10 advice): a LEGITIMATE cross-batch redelivery of the
-              // same doc_id is indistinguishable from replay, so it is
-              // also suppressed — the redelivered doc reports kept again
-              // and re-appends duplicate index entries (harmless to
-              // decisions; healed by `Compaction` with
-              // dropExactDuplicates). Upstreams that re-emit ids across
-              // batches get at-least-once kept records, not a dup report
-              .filter(col("old_id") =!= col("new_id"))
-              .groupBy("new_id", "old_id")
-              .agg(first(estimate(col("sig"), col("old_sig"), k)).as("est"))
-              .filter(col("est") >= threshold)
-              .groupBy("new_id").agg(min("old_id").as("matched"))
-              .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-          } else Map.empty
-        val pairs = collidingPairs(entries, k, threshold, maxCandidates)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-        val folded = greedyFold(crossMatch, pairs)
+      // cross-batch matches: smallest INDEXED (= earlier kept) doc
+      // sharing a band bucket at estimate >= threshold — the read is
+      // partition-pruned to the batch's own buckets
+      val indexPath = new org.apache.hadoop.fs.Path(indexDir)
+      val fs = indexPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val touched = entries.select("_bucket").distinct()
+        .collect().map(_.getInt(0)).toSeq
+      val crossMatch: Map[Long, Long] =
+        if (fs.exists(indexPath) && touched.nonEmpty) {
+          spark.read.schema(entries.schema).parquet(indexDir)
+            .filter(col("_bucket").isin(touched: _*))
+            .select(col("doc_id").as("old_id"), col("sig").as("old_sig"),
+              col("band_key"))
+            .join(entries.select(col("doc_id").as("new_id"), col("sig"),
+              col("band_key")), Seq("band_key"))
+            // a doc never matches ITSELF: on crash-replay (index append
+            // landed, checkpoint commit did not) the re-executed batch
+            // finds its own kept docs' entries in the index at estimate
+            // 1.0 — without this guard every previously-kept doc would
+            // be rewritten as dropped-matching-itself, permanently
+            // corrupting the replayed decisions (review r10). The cost
+            // (r10 advice): a LEGITIMATE cross-batch redelivery of the
+            // same doc_id is indistinguishable from replay, so it is
+            // also suppressed — the redelivered doc reports kept again
+            // and re-appends duplicate index entries (harmless to
+            // decisions; healed by `Compaction` with
+            // dropExactDuplicates). Upstreams that re-emit ids across
+            // batches get at-least-once kept records, not a dup report
+            .filter(col("old_id") =!= col("new_id"))
+            .groupBy("new_id", "old_id")
+            .agg(first(estimate(col("sig"), col("old_sig"), k)).as("est"))
+            .filter(col("est") >= threshold)
+            .groupBy("new_id").agg(min("old_id").as("matched"))
+            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        } else Map.empty
+      val pairs = collidingPairs(entries, k, threshold, maxCandidates)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      val folded = greedyFold(crossMatch, pairs)
 
-        expandMembers(decisions(repSigs, folded), members)
-          .withColumn("_batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch_id").parquet(outDir)
-        val dropped = folded.collect { case (id, false, _) => id }
-        // anti-join, not an isin literal list: a duplicate-heavy batch
-        // can drop most of its docs, and embedding that many literals
-        // in the plan is the same plan-size cap searchPrunedDf's doc
-        // warns about; the dropped relation is collider-bounded, so it
-        // broadcasts (review r10)
-        val keptEntries =
-          if (dropped.isEmpty) entries
-          else {
-            import spark.implicits._
-            entries.join(broadcast(dropped.toDF("doc_id")),
-              Seq("doc_id"), "left_anti")
-          }
-        if (!keptEntries.isEmpty)
-          keptEntries.write.mode("append").partitionBy("_bucket").parquet(indexDir)
-        ()
-      }
+      BatchSink.writeBatch(expandMembers(decisions(repSigs, folded), members),
+        outDir, batchId)
+      val dropped = folded.collect { case (id, false, _) => id }
+      // anti-join, not an isin literal list: a duplicate-heavy batch
+      // can drop most of its docs, and embedding that many literals
+      // in the plan is the same plan-size cap searchPrunedDf's doc
+      // warns about; the dropped relation is collider-bounded, so it
+      // broadcasts (review r10)
+      val keptEntries =
+        if (dropped.isEmpty) entries
+        else {
+          import spark.implicits._
+          entries.join(broadcast(dropped.toDF("doc_id")),
+            Seq("doc_id"), "left_anti")
+        }
+      if (!keptEntries.isEmpty)
+        keptEntries.write.mode("append").partitionBy("_bucket").parquet(indexDir)
+    }
   }
 
   /** BATCH twin of `nearDupFilter` with identical greedy semantics over

@@ -2,8 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
+import graft.BatchSink
 import graft.operators.{Dsir, QualityModel}
 
 /** STREAMING DSIR importance gating — the in-flight face of the x7
@@ -21,10 +22,9 @@ import graft.operators.{Dsir, QualityModel}
   * construction, and batch/stream parity is exact integer equality
   * (DsirStreamSpec pins it).
   *
-  * Crash replay: decisions land in `_batch_id` partitions via dynamic
-  * partition overwrite — a replayed batch overwrites its own partial
-  * (the Pipeline.applyBatch scheme), so the kept set is exactly-once
-  * per delivered doc.
+  * Crash replay: decisions land in `_batch_id` partitions through
+  * `BatchSink.writeBatch` — a replayed batch overwrites its own
+  * partial, so the kept set is exactly-once per delivered doc.
   *
   * Refit: DSIR weights drift as the raw distribution does; refitting is
   * a batch `fitWeights` over a fresh slice, atomically replacing
@@ -151,18 +151,11 @@ object DsirStream {
   def importanceGate(docs: DataFrame, weightsDir: String, outDir: String,
       checkpointDir: String, minScoreE6: Long, dims: Int = 1024)
       : DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        scoreBatch(batch.dropDuplicates("doc_id"), weightsDir, dims)
-          .filter(col("score_e6") >= minScoreE6)
-          .withColumn("_batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch_id").parquet(outDir)
-        ()
-      }
+    BatchSink.stream(docs, checkpointDir) { (batch, batchId) =>
+      val passed = scoreBatch(batch.dropDuplicates("doc_id"), weightsDir, dims)
+        .filter(col("score_e6") >= minScoreE6)
+      BatchSink.writeBatch(passed, outDir, batchId)
+    }
 
   /** The stream's current kept set. */
   def kept(spark: SparkSession, outDir: String): DataFrame =

@@ -2,8 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
+import graft.BatchSink
 import graft.operators.SimilarityOps
 
 /** STREAMING embedding-cosine near-dup dedup — `DocStream.nearDupFilter`
@@ -75,80 +76,74 @@ object EmbedStream {
       maxCandidates: Int = 64): DataStreamWriter[Row] = {
     require(threshold <= MaxThreshold,
       s"threshold must be <= $MaxThreshold so identical vectors always match")
-    emb.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        graft.functions.GraftFunctions.register(spark)
-        val b0 = bucketed(batch, idCol, embCol, bits, dim)
-        // duplicate-storm pre-collapse (DocStream.collapse on the vector
-        // itself as the signature): one rep per distinct eligible vector
-        val (repB0, members) = DocStream.collapse(
-          b0.withColumn("sig", when(collapsible, col("embedding"))))
-        val b = repB0.drop("sig").localCheckpoint()
-        val p = probed(b, bits)
+    BatchSink.stream(emb, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      graft.functions.GraftFunctions.register(spark)
+      val b0 = bucketed(batch, idCol, embCol, bits, dim)
+      // duplicate-storm pre-collapse (DocStream.collapse on the vector
+      // itself as the signature): one rep per distinct eligible vector
+      val (repB0, members) = DocStream.collapse(
+        b0.withColumn("sig", when(collapsible, col("embedding"))))
+      val b = repB0.drop("sig").localCheckpoint()
+      val p = probed(b, bits)
 
-        // the probe set bounds the index read: ≤ batch × (bits+1) codes,
-        // each a partition directory of the index
-        val touched = p.select("probe").distinct()
-          .collect().map(_.getLong(0)).toSeq
-        val indexPath = new org.apache.hadoop.fs.Path(indexDir)
-        val fs = indexPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val crossMatch: Map[Long, Long] =
-          if (fs.exists(indexPath) && touched.nonEmpty) {
-            spark.read.schema(b.schema).parquet(indexDir)
-              .filter(col("bucket").isin(touched: _*))
-              .select(col("doc_id").as("old_id"), col("embedding").as("old_emb"),
-                col("bucket").as("probe"))
-              .join(p.select(col("doc_id").as("new_id"),
-                col("embedding").as("new_emb"), col("probe")), Seq("probe"))
-              // self-match guard: on crash-replay the batch's own kept
-              // vectors are already indexed at cosine 1.0 — same
-              // corruption as DocStream without it, and the same
-              // documented cost: same-id cross-batch redelivery is
-              // indistinguishable from replay, so it re-reports kept and
-              // duplicates index entries (healed by compaction)
-              .filter(col("old_id") =!= col("new_id"))
-              .filter(expr("graft_cosine(new_emb, old_emb)") >= threshold)
-              .groupBy("new_id").agg(min("old_id").as("matched"))
-              .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-          } else Map.empty
-        // within-batch pairs over reps only, capped per later doc — the
-        // same fail-open driver-row bound as DocStream.collidingPairs
-        val pairs = p.select(col("doc_id").as("d1"),
-            col("embedding").as("e1"), col("probe"))
-          .join(b.select(col("doc_id").as("d2"), col("embedding").as("e2"),
-            col("bucket").as("probe")), Seq("probe"))
-          .filter(col("d1") < col("d2"))
-          .filter(expr("graft_cosine(e1, e2)") >= threshold)
-          .select("d1", "d2").distinct()
-          .withColumn("_rn", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy("d2").orderBy("d1")))
-          .filter(col("_rn") <= maxCandidates)
-          .select("d1", "d2")
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-        val folded = DocStream.greedyFold(crossMatch, pairs)
+      // the probe set bounds the index read: ≤ batch × (bits+1) codes,
+      // each a partition directory of the index
+      val touched = p.select("probe").distinct()
+        .collect().map(_.getLong(0)).toSeq
+      val indexPath = new org.apache.hadoop.fs.Path(indexDir)
+      val fs = indexPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val crossMatch: Map[Long, Long] =
+        if (fs.exists(indexPath) && touched.nonEmpty) {
+          spark.read.schema(b.schema).parquet(indexDir)
+            .filter(col("bucket").isin(touched: _*))
+            .select(col("doc_id").as("old_id"), col("embedding").as("old_emb"),
+              col("bucket").as("probe"))
+            .join(p.select(col("doc_id").as("new_id"),
+              col("embedding").as("new_emb"), col("probe")), Seq("probe"))
+            // self-match guard: on crash-replay the batch's own kept
+            // vectors are already indexed at cosine 1.0 — same
+            // corruption as DocStream without it, and the same
+            // documented cost: same-id cross-batch redelivery is
+            // indistinguishable from replay, so it re-reports kept and
+            // duplicates index entries (healed by compaction)
+            .filter(col("old_id") =!= col("new_id"))
+            .filter(expr("graft_cosine(new_emb, old_emb)") >= threshold)
+            .groupBy("new_id").agg(min("old_id").as("matched"))
+            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        } else Map.empty
+      // within-batch pairs over reps only, capped per later doc — the
+      // same fail-open driver-row bound as DocStream.collidingPairs
+      val pairs = p.select(col("doc_id").as("d1"),
+          col("embedding").as("e1"), col("probe"))
+        .join(b.select(col("doc_id").as("d2"), col("embedding").as("e2"),
+          col("bucket").as("probe")), Seq("probe"))
+        .filter(col("d1") < col("d2"))
+        .filter(expr("graft_cosine(e1, e2)") >= threshold)
+        .select("d1", "d2").distinct()
+        .withColumn("_rn", row_number().over(
+          org.apache.spark.sql.expressions.Window
+            .partitionBy("d2").orderBy("d1")))
+        .filter(col("_rn") <= maxCandidates)
+        .select("d1", "d2")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      val folded = DocStream.greedyFold(crossMatch, pairs)
 
-        DocStream.expandMembers(DocStream.decisions(b, folded), members)
-          .withColumn("_batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch_id").parquet(outDir)
-        val dropped = folded.collect { case (id, false, _) => id }
-        // anti-join, not an isin literal list — same plan-size rationale
-        // as DocStream (review r10)
-        val keptEntries =
-          if (dropped.isEmpty) b
-          else {
-            import spark.implicits._
-            b.join(broadcast(dropped.toDF("doc_id")), Seq("doc_id"), "left_anti")
-          }
-        if (!keptEntries.isEmpty)
-          keptEntries.write.mode("append").partitionBy("bucket").parquet(indexDir)
-        ()
-      }
+      BatchSink.writeBatch(
+        DocStream.expandMembers(DocStream.decisions(b, folded), members),
+        outDir, batchId)
+      val dropped = folded.collect { case (id, false, _) => id }
+      // anti-join, not an isin literal list — same plan-size rationale
+      // as DocStream (review r10)
+      val keptEntries =
+        if (dropped.isEmpty) b
+        else {
+          import spark.implicits._
+          b.join(broadcast(dropped.toDF("doc_id")), Seq("doc_id"), "left_anti")
+        }
+      if (!keptEntries.isEmpty)
+        keptEntries.write.mode("append").partitionBy("bucket").parquet(indexDir)
+    }
   }
 
   /** BATCH twin with identical semantics, the spec's oracle: the same

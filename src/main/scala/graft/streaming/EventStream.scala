@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.BatchSink
+
 /** Event-time streaming over the `events` table shape (builder brief:
   * "watermarks + windowed aggs; mapGroupsWithState/flatMapGroupsWithState
   * for custom state" — beyond the reference surface, which is arrival-
@@ -294,59 +296,52 @@ object EventStream {
   def dedupStreamMinBy(events: DataFrame, sinkDir: String, checkpointDir: String,
       idCol: String = "event_id", nBuckets: Int = 64,
       retentionMs: Option[Long] = None): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events
-      .withWatermark("ts", "1 day")
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Update)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sess = batch.sparkSession
-        val newMin = dedupBatch(batch, idCol)
-          .withColumn("_bucket", pmod(hash(col(idCol)), lit(nBuckets)))
-        // the touched-bucket set is bounded by nBuckets — a metadata-
-        // sized collect, same class as Pipeline's file listings
-        val touched = newMin.select("_bucket").distinct()
-          .collect().map(_.getInt(0)).toSeq
-        val sinkPath = new org.apache.hadoop.fs.Path(sinkDir)
-        val fs = sinkPath.getFileSystem(sess.sparkContext.hadoopConfiguration)
-        if (touched.nonEmpty) {
-          val merged0 =
-            if (fs.exists(sinkPath)) {
-              // explicit schema (partition col included): the directory
-              // may be mid-rewrite from a prior batch's perspective, and
-              // the filter on the partition column prunes every
-              // untouched bucket at file-listing time
-              val existingTouched = sess.read.schema(newMin.schema).parquet(sinkDir)
-                .filter(col("_bucket").isin(touched: _*))
-              dedupBatch(existingTouched.unionByName(newMin), idCol)
-            } else newMin
-          val merged = retentionMs.fold(merged0) { ms =>
-            // horizon anchored at the batch's max event time — the
-            // foreachBatch stand-in for the stream's watermark
-            val maxTs = batch.agg(max(col("ts"))).head.getTimestamp(0)
-            if (maxTs == null) merged0
-            else merged0.filter(
-              col("ts") >= lit(new java.sql.Timestamp(maxTs.getTime - ms)))
-          }
-          // dynamic partition overwrite only rewrites buckets PRESENT in
-          // `merged` — a touched bucket whose rows ALL expired under the
-          // retention horizon would keep its stale pre-merge files (the
-          // dropped ids would resurrect with their old values). Delete
-          // those bucket directories explicitly, as compactSink does.
-          val mergedC = merged.localCheckpoint()
-          val keptBuckets = mergedC.select("_bucket").distinct()
-            .collect().map(_.getInt(0)).toSet
-          if (keptBuckets.nonEmpty)
-            mergedC.write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("_bucket")
-              .parquet(sinkDir)
-          touched.filterNot(keptBuckets).foreach { b =>
-            fs.delete(new org.apache.hadoop.fs.Path(s"$sinkDir/_bucket=$b"), true)
-          }
+    // append mode: the query has no stateful operator, and for such a
+    // query Spark treats Update and Append alike
+    BatchSink.stream(events.withWatermark("ts", "1 day"), checkpointDir) { (batch, _) =>
+      val sess = batch.sparkSession
+      val newMin = dedupBatch(batch, idCol)
+        .withColumn("_bucket", pmod(hash(col(idCol)), lit(nBuckets)))
+      // the touched-bucket set is bounded by nBuckets — a metadata-
+      // sized collect, same class as Pipeline's file listings
+      val touched = newMin.select("_bucket").distinct()
+        .collect().map(_.getInt(0)).toSeq
+      val sinkPath = new org.apache.hadoop.fs.Path(sinkDir)
+      val fs = sinkPath.getFileSystem(sess.sparkContext.hadoopConfiguration)
+      if (touched.nonEmpty) {
+        val merged0 =
+          if (fs.exists(sinkPath)) {
+            // explicit schema (partition col included): the directory
+            // may be mid-rewrite from a prior batch's perspective, and
+            // the filter on the partition column prunes every
+            // untouched bucket at file-listing time
+            val existingTouched = sess.read.schema(newMin.schema).parquet(sinkDir)
+              .filter(col("_bucket").isin(touched: _*))
+            dedupBatch(existingTouched.unionByName(newMin), idCol)
+          } else newMin
+        val merged = retentionMs.fold(merged0) { ms =>
+          // horizon anchored at the batch's max event time — the
+          // foreachBatch stand-in for the stream's watermark
+          val maxTs = batch.agg(max(col("ts"))).head.getTimestamp(0)
+          if (maxTs == null) merged0
+          else merged0.filter(
+            col("ts") >= lit(new java.sql.Timestamp(maxTs.getTime - ms)))
         }
-        ()
+        // dynamic partition overwrite only rewrites buckets PRESENT in
+        // `merged` — a touched bucket whose rows ALL expired under the
+        // retention horizon would keep its stale pre-merge files (the
+        // dropped ids would resurrect with their old values). Delete
+        // those bucket directories explicitly, as compactSink does.
+        val mergedC = merged.localCheckpoint()
+        val keptBuckets = mergedC.select("_bucket").distinct()
+          .collect().map(_.getInt(0)).toSet
+        if (keptBuckets.nonEmpty)
+          BatchSink.overwritePartitions(mergedC, sinkDir, "_bucket")
+        touched.filterNot(keptBuckets).foreach { b =>
+          fs.delete(new org.apache.hadoop.fs.Path(s"$sinkDir/_bucket=$b"), true)
+        }
       }
+    }
 
   /** Maintenance sweep for a `dedupStreamMinBy` sink: drop rows whose
     * event time (`ts`) falls more than `retentionMs` before the sink's
@@ -374,9 +369,7 @@ object EventStream {
         val keptBuckets = kept.select("_bucket").distinct()
           .collect().map(_.getInt(0)).toSet
         if (keptBuckets.nonEmpty)
-          kept.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_bucket").parquet(sinkDir)
+          BatchSink.overwritePartitions(kept, sinkDir, "_bucket")
         val fs = new org.apache.hadoop.fs.Path(sinkDir)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
         touched.filterNot(keptBuckets).foreach { b =>

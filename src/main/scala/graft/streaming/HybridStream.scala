@@ -2,8 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
+import graft.BatchSink
 import graft.operators.{Bm25, HashedEmbedding, IvfPq, RankFusion,
   TokenEmbeddingTable}
 
@@ -25,13 +26,12 @@ import graft.operators.{Bm25, HashedEmbedding, IvfPq, RankFusion,
   * visible while the dense model stays frozen until the stream is
   * redefined over a retrained artifact.
   *
-  * Crash replay is idempotent: fused results land in `_batch_id`
-  * partitions with dynamic partition overwrite (the `Pipeline
-  * .applyBatch` scheme) — a replayed batch overwrites its own
-  * partition, never duplicates it. At-least-once sources may duplicate
-  * a query WITHIN a batch; `dropDuplicates("query_id")` restores set
-  * semantics before either leg prices anything (a duplicated query row
-  * would double every RRF contribution).
+  * Crash replay is idempotent: fused results land through
+  * `BatchSink.writeBatch` — a replayed batch overwrites its own
+  * `_batch_id` partition, never duplicates it. At-least-once sources
+  * may duplicate a query WITHIN a batch; `dropDuplicates("query_id")`
+  * restores set semantics before either leg prices anything (a
+  * duplicated query row would double every RRF contribution).
   *
   * Per-batch scale shape: the lexical read is pruned to the batch's
   * term buckets, the dense read to the batch's probed cells plus the
@@ -110,34 +110,27 @@ object HybridStream {
       .join(pairs.select(col("account"), col("doc_id").as("vec_id")),
         Seq("vec_id"))
     val vectors = spark.read.parquet(s"$annDir/vectors")
-    aqueries.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.dropDuplicates("account", "query_id")
-          .localCheckpoint()
-        val lex = Bm25.servedTopKPerGrantWith(spark, bm25Dir, b, k,
-            pairs, statsA)
-          .select("account", "query_id", "doc_id", "rnk")
-        val qvecs = b.select("account", "query_id")
-          .join(TokenEmbeddingTable.queryVecs(
-            b.select(col("query_id").as("doc_id"),
-                col("q_text").as("text"))
-              .dropDuplicates("doc_id"),
-            merges, bpePat, table), Seq("query_id"))
-        val dense = IvfPq.searchRerankDf(codesG, vectors, qvecs, cents,
-            books, nprobe, kCand, k, dims, excludeSelf = false,
-            scopeCols = Seq("account"))
-          .select(col("account"), col("query_id"),
-            col("neighbor_id").as("doc_id"), col("rnk"))
-        RankFusion.rrf(Seq(lex, dense), k,
-            keyCols = Seq("account", "query_id"))
-          .withColumn("_batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch_id").parquet(outDir)
-        ()
-      }
+    BatchSink.stream(aqueries, checkpointDir) { (batch, batchId) =>
+      val b = batch.dropDuplicates("account", "query_id")
+        .localCheckpoint()
+      val lex = Bm25.servedTopKPerGrantWith(spark, bm25Dir, b, k,
+          pairs, statsA)
+        .select("account", "query_id", "doc_id", "rnk")
+      val qvecs = b.select("account", "query_id")
+        .join(TokenEmbeddingTable.queryVecs(
+          b.select(col("query_id").as("doc_id"),
+              col("q_text").as("text"))
+            .dropDuplicates("doc_id"),
+          merges, bpePat, table), Seq("query_id"))
+      val dense = IvfPq.searchRerankDf(codesG, vectors, qvecs, cents,
+          books, nprobe, kCand, k, dims, excludeSelf = false,
+          scopeCols = Seq("account"))
+        .select(col("account"), col("query_id"),
+          col("neighbor_id").as("doc_id"), col("rnk"))
+      BatchSink.writeBatch(RankFusion.rrf(Seq(lex, dense), k,
+          keyCols = Seq("account", "query_id")),
+        outDir, batchId)
+    }
   }
 
   private def serveWith(queries: DataFrame, bm25Dir: String,
@@ -163,30 +156,22 @@ object HybridStream {
       case None => codesAll
     }
     val vectors = spark.read.parquet(s"$annDir/vectors")
-    queries.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.dropDuplicates("query_id").localCheckpoint()
-        val lex = (frozenGrant match {
-          case Some(a) => Bm25.servedTopKScopedWith(spark, bm25Dir, b, k,
-            a, grantStats.get)
-          case None => Bm25.servedTopKDf(spark, bm25Dir, b, k)
-        }).select("query_id", "doc_id", "rnk")
-        val qvecs = TokenEmbeddingTable.queryVecs(
-          b.select(col("query_id").as("doc_id"),
-            col("q_text").as("text")),
-          merges, bpePat, table)
-        val dense = IvfPq.searchRerankDf(codes, vectors, qvecs, cents,
-            books, nprobe, kCand, k, dims, excludeSelf = false)
-          .select(col("query_id"), col("neighbor_id").as("doc_id"),
-            col("rnk"))
-        RankFusion.rrf(Seq(lex, dense), k)
-          .withColumn("_batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch_id").parquet(outDir)
-        ()
-      }
+    BatchSink.stream(queries, checkpointDir) { (batch, batchId) =>
+      val b = batch.dropDuplicates("query_id").localCheckpoint()
+      val lex = (frozenGrant match {
+        case Some(a) => Bm25.servedTopKScopedWith(spark, bm25Dir, b, k,
+          a, grantStats.get)
+        case None => Bm25.servedTopKDf(spark, bm25Dir, b, k)
+      }).select("query_id", "doc_id", "rnk")
+      val qvecs = TokenEmbeddingTable.queryVecs(
+        b.select(col("query_id").as("doc_id"),
+          col("q_text").as("text")),
+        merges, bpePat, table)
+      val dense = IvfPq.searchRerankDf(codes, vectors, qvecs, cents,
+          books, nprobe, kCand, k, dims, excludeSelf = false)
+        .select(col("query_id"), col("neighbor_id").as("doc_id"),
+          col("rnk"))
+      BatchSink.writeBatch(RankFusion.rrf(Seq(lex, dense), k), outDir, batchId)
+    }
   }
 }

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.BatchSink
+
 /** STREAMING daily spend leaderboard — e13's in-flight twin on the
   * shared partial-partition machine: per-(day, user) cent totals and
   * event counts are SUMS, so each micro-batch lands additive partials
@@ -23,24 +25,17 @@ object LeaderboardStream {
     */
   def spendStream(events: DataFrame, outDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val agg = batch.groupBy(
-            date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("g"),
-            col("user_id").as("idx"))
-          .agg(sum(expr("CAST(round(value * 100) AS BIGINT)")).as("cents"),
-            count(lit(1)).as("n"))
-        agg.select(col("g"), lit(0).as("r"), col("idx"), col("cents").as("c"))
-          .unionByName(agg.select(col("g"), lit(1).as("r"), col("idx"),
-            col("n").as("c")))
-          .withColumn("_batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("g", "_batch_id").parquet(outDir)
-        ()
-      }
+    BatchSink.stream(events, checkpointDir) { (batch, batchId) =>
+      val agg = batch.groupBy(
+          date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("g"),
+          col("user_id").as("idx"))
+        .agg(sum(expr("CAST(round(value * 100) AS BIGINT)")).as("cents"),
+          count(lit(1)).as("n"))
+      val cells = agg.select(col("g"), lit(0).as("r"), col("idx"), col("cents").as("c"))
+        .unionByName(agg.select(col("g"), lit(1).as("r"), col("idx"),
+          col("n").as("c")))
+      BatchSink.writeBatch(cells, outDir, batchId, "g")
+    }
 
   /** The leaderboard over the stream's current state: top `k` users
     * per day by exact cents, the e13 output shape.

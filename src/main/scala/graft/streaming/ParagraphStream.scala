@@ -2,8 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
+import graft.BatchSink
 import graft.operators.DedupOps
 
 /** The STREAMING face of paragraph-level dedup (d12): documents arrive
@@ -43,74 +44,55 @@ object ParagraphStream {
   def cleanStream(docs: DataFrame, indexDir: String, outDir: String,
       checkpointDir: String, segTokens: Int = 10,
       nBuckets: Int = 64): DataStreamWriter[Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val hconf = spark.sparkContext.hadoopConfiguration
-        val metaPath = new org.apache.hadoop.fs.Path(s"$indexDir/_meta")
-        val mfs = metaPath.getFileSystem(hconf)
-        val nB: Int =
-          if (mfs.exists(metaPath))
-            spark.read.parquet(s"$indexDir/_meta")
-              .select("n_buckets").head().getInt(0)
-          else {
-            import spark.implicits._
-            Seq(nBuckets).toDF("n_buckets")
-              .write.mode("overwrite").parquet(s"$indexDir/_meta")
-            nBuckets
-          }
-        val b0 = batch.dropDuplicates("doc_id")
-        // segment + within-batch owner (d12's min-okey rule)
-        val seg = DedupOps.segments(b0, "doc_id", "text", segTokens)
-          .withColumn("h", md5(col("seg")))
-          .withColumn("okey", col("doc_id") * 1000000L + col("seg_idx"))
-          .withColumn("hbucket", pmod(hash(col("h")), lit(nB)))
-        val owners = seg.groupBy("h").agg(min("okey").as("bokey"))
-        val batchKept = seg.join(owners, "h")
-          .filter(col("okey") === col("bokey")).drop("bokey")
-          .localCheckpoint()
-        // cross-batch: pruned lookup, same-doc entries self-excluded
-        val touched = batchKept.select("hbucket").distinct()
-          .collect().map(_.getInt(0)).toSeq
-        val entriesDir = s"$indexDir/entries"
-        val entriesPath = new org.apache.hadoop.fs.Path(entriesDir)
-        val fs = entriesPath.getFileSystem(hconf)
-        val kept = (
-          if (fs.exists(entriesPath) && touched.nonEmpty) {
-            val idx = spark.read.parquet(entriesDir)
-              .filter(col("hbucket").isin(touched: _*))
-              .select(col("h"), col("okey").as("_old"))
-            batchKept.join(idx, Seq("h"), "left")
-              .groupBy(batchKept.columns.map(col): _*)
-              .agg(min(when(expr("_old div 1000000L") =!= col("doc_id"),
-                  col("_old"))).as("_foreign"))
-              .filter(col("_foreign").isNull)
-              .drop("_foreign")
-          } else batchKept
-        ).localCheckpoint()
-        // reassemble: every batch doc emits a row; fully-cut docs empty
-        val rebuilt = kept.groupBy("doc_id")
-          .agg(count(lit(1)).as("n_kept"),
-            array_join(expr(
-              "transform(array_sort(collect_list(named_struct('i', seg_idx, 's', seg))), x -> x.s)"),
-              " ").as("text_clean"))
-        DedupOps.segments(b0, "doc_id", "text", segTokens)
-          .groupBy("doc_id").agg(count(lit(1)).as("n_segs"))
-          .join(b0.select("doc_id", "source"), Seq("doc_id"))
-          .join(rebuilt, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("source"), col("n_segs"),
-            coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-            coalesce(col("text_clean"), lit("")).as("text_clean"),
-            lit(batchId).as("_batch_id"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch_id").parquet(outDir)
-        // grow the index with this batch's kept occurrences
-        kept.select("h", "okey", "hbucket")
-          .repartition(col("hbucket"))
-          .write.mode("append").partitionBy("hbucket").parquet(entriesDir)
-        ()
-      }
+    BatchSink.stream(docs, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val nB = CorpusStream.persistedBuckets(spark, indexDir, nBuckets)
+      val b0 = batch.dropDuplicates("doc_id")
+      // segment + within-batch owner (d12's min-okey rule)
+      val seg = DedupOps.segments(b0, "doc_id", "text", segTokens)
+        .withColumn("h", md5(col("seg")))
+        .withColumn("okey", col("doc_id") * 1000000L + col("seg_idx"))
+        .withColumn("hbucket", pmod(hash(col("h")), lit(nB)))
+      val owners = seg.groupBy("h").agg(min("okey").as("bokey"))
+      val batchKept = seg.join(owners, "h")
+        .filter(col("okey") === col("bokey")).drop("bokey")
+        .localCheckpoint()
+      // cross-batch: pruned lookup, same-doc entries self-excluded
+      val touched = batchKept.select("hbucket").distinct()
+        .collect().map(_.getInt(0)).toSeq
+      val entriesDir = s"$indexDir/entries"
+      val entriesPath = new org.apache.hadoop.fs.Path(entriesDir)
+      val fs = entriesPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val kept = (
+        if (fs.exists(entriesPath) && touched.nonEmpty) {
+          val idx = spark.read.parquet(entriesDir)
+            .filter(col("hbucket").isin(touched: _*))
+            .select(col("h"), col("okey").as("_old"))
+          batchKept.join(idx, Seq("h"), "left")
+            .groupBy(batchKept.columns.map(col): _*)
+            .agg(min(when(expr("_old div 1000000L") =!= col("doc_id"),
+                col("_old"))).as("_foreign"))
+            .filter(col("_foreign").isNull)
+            .drop("_foreign")
+        } else batchKept
+      ).localCheckpoint()
+      // reassemble: every batch doc emits a row; fully-cut docs empty
+      val rebuilt = kept.groupBy("doc_id")
+        .agg(count(lit(1)).as("n_kept"),
+          array_join(expr(
+            "transform(array_sort(collect_list(named_struct('i', seg_idx, 's', seg))), x -> x.s)"),
+            " ").as("text_clean"))
+      val cleaned = DedupOps.segments(b0, "doc_id", "text", segTokens)
+        .groupBy("doc_id").agg(count(lit(1)).as("n_segs"))
+        .join(b0.select("doc_id", "source"), Seq("doc_id"))
+        .join(rebuilt, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("source"), col("n_segs"),
+          coalesce(col("n_kept"), lit(0L)).as("n_kept"),
+          coalesce(col("text_clean"), lit("")).as("text_clean"))
+      BatchSink.writeBatch(cleaned, outDir, batchId)
+      // grow the index with this batch's kept occurrences
+      kept.select("h", "okey", "hbucket")
+        .repartition(col("hbucket"))
+        .write.mode("append").partitionBy("hbucket").parquet(entriesDir)
+    }
 }

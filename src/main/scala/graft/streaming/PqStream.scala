@@ -2,8 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
+import graft.BatchSink
 import graft.operators.PqIndex
 
 /** STREAMING PQ encoding over frozen codebooks — the online half of
@@ -23,9 +24,9 @@ import graft.operators.PqIndex
   * (drift past tolerance → retrain → restart, the AnnStream
   * single-writer contract; x11's drift report is the monitor).
   *
-  * Crash replay is idempotent via the `_batch_id` dynamic-overwrite
-  * scheme; duplicate vec_ids within a batch collapse to one row
-  * (at-least-once source; encoding is deterministic).
+  * Crash replay is idempotent via `BatchSink.writeBatch`; duplicate
+  * vec_ids within a batch collapse to one row (at-least-once source;
+  * encoding is deterministic).
   */
 object PqStream {
 
@@ -65,23 +66,15 @@ object PqStream {
       outDir: String, checkpointDir: String, k: Int, nprobe: Int = 4,
       dims: Int = 64): DataStreamWriter[Row] = {
     val codes = queries.sparkSession.read.parquet(servedDir)
-    queries.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val q = graft.operators.KMeans.quantized(
-            batch.dropDuplicates("query_id")
-              .select(col("query_id").as("vec_id"), col("embedding")))
-          .select(col("vec_id").as("query_id"), col("qv"))
-        graft.operators.IvfPq
-          .searchDf(codes, q, cents, books, nprobe, k, dims,
-            excludeSelf = false)
-          .withColumn("_batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch_id").parquet(outDir)
-        ()
-      }
+    BatchSink.stream(queries, checkpointDir) { (batch, batchId) =>
+      val q = graft.operators.KMeans.quantized(
+          batch.dropDuplicates("query_id")
+            .select(col("query_id").as("vec_id"), col("embedding")))
+        .select(col("vec_id").as("query_id"), col("qv"))
+      BatchSink.writeBatch(graft.operators.IvfPq.searchDf(codes, q, cents,
+          books, nprobe, k, dims, excludeSelf = false),
+        outDir, batchId)
+    }
   }
 
   /** The TWO-STAGE streamed serving face: each micro-batch runs the
@@ -100,37 +93,22 @@ object PqStream {
     val (cents, books) = graft.operators.IvfPq.loadModel(spark, artifactDir)
     val codes = spark.read.parquet(s"$artifactDir/codes")
     val vectors = spark.read.parquet(s"$artifactDir/vectors")
-    queries.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val q = graft.operators.KMeans.quantized(
-            batch.dropDuplicates("query_id")
-              .select(col("query_id").as("vec_id"), col("embedding")))
-          .select(col("vec_id").as("query_id"), col("qv"))
-        graft.operators.IvfPq
-          .searchRerankDf(codes, vectors, q, cents, books, nprobe,
-            kCand, k, dims, excludeSelf = false)
-          .withColumn("_batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch_id").parquet(outDir)
-        ()
-      }
+    BatchSink.stream(queries, checkpointDir) { (batch, batchId) =>
+      val q = graft.operators.KMeans.quantized(
+          batch.dropDuplicates("query_id")
+            .select(col("query_id").as("vec_id"), col("embedding")))
+        .select(col("vec_id").as("query_id"), col("qv"))
+      BatchSink.writeBatch(graft.operators.IvfPq.searchRerankDf(codes,
+          vectors, q, cents, books, nprobe, kCand, k, dims,
+          excludeSelf = false),
+        outDir, batchId)
+    }
   }
 
   private def writeEncoded(vecs: DataFrame, outDir: String,
       checkpointDir: String,
       enc: DataFrame => DataFrame): DataStreamWriter[Row] =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        enc(batch.dropDuplicates("vec_id"))
-          .withColumn("_batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch_id").parquet(outDir)
-        ()
-      }
+    BatchSink.stream(vecs, checkpointDir) { (batch, batchId) =>
+      BatchSink.writeBatch(enc(batch.dropDuplicates("vec_id")), outDir, batchId)
+    }
 }

@@ -2,8 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
+import graft.BatchSink
 import graft.operators.Bm25
 
 /** STREAMING BM25 serving over a persisted inverted index — the lexical
@@ -19,9 +20,9 @@ import graft.operators.Bm25
   * scores are exact e9 integers. A batch of any size carries the same
   * guarantees.
   *
-  * Crash replay is idempotent: results land in `_batch_id` partitions
-  * with dynamic partition overwrite (the `Pipeline.applyBatch` scheme) —
-  * a replayed batch overwrites its own partition, never duplicates it.
+  * Crash replay is idempotent: results land through
+  * `BatchSink.writeBatch` — a replayed batch overwrites its own
+  * `_batch_id` partition, never duplicates it.
   *
   * Growth contract — LOOSER than AnnStream's: `Bm25.appendToIndex` may
   * run between micro-batches; the per-batch `spark.read` lists files
@@ -36,19 +37,12 @@ object RetrievalStream {
 
   def serve(queries: DataFrame, indexDir: String, outDir: String,
       checkpointDir: String, k: Int): DataStreamWriter[Row] =
-    queries.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // set semantics per query_id (an at-least-once source can
-        // deliver a query twice in one batch; a duplicated row would
-        // double every term contribution) — the AnnStream contract
-        Bm25.servedTopKDf(batch.sparkSession, indexDir,
-            batch.dropDuplicates("query_id"), k)
-          .withColumn("_batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch_id").parquet(outDir)
-        ()
-      }
+    BatchSink.stream(queries, checkpointDir) { (batch, batchId) =>
+      // set semantics per query_id (an at-least-once source can
+      // deliver a query twice in one batch; a duplicated row would
+      // double every term contribution) — the AnnStream contract
+      BatchSink.writeBatch(Bm25.servedTopKDf(batch.sparkSession, indexDir,
+          batch.dropDuplicates("query_id"), k),
+        outDir, batchId)
+    }
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 
+import graft.BatchSink
 import graft.operators.{DedupOps, Sketches}
 
 /** STREAMING distinct-cardinality — the t10 HyperLogLog maintained as
@@ -58,23 +59,16 @@ object SketchStream {
   def counterStream(docs: DataFrame, outDir: String, checkpointDir: String,
       textCol: String = "text", depth: Int = 4, width: Int = 1024)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import org.apache.spark.sql.functions._
-        // empty tokens excluded — the shared tokenization convention
-        // (Bm25.postings / QualityModel / t11; ADVICE r11)
-        Sketches.cmCounters(
-            batch.select(explode(split(col(textCol), " ")).as("tok"))
-              .filter(col("tok") =!= ""),
-            depth, width)
-          .withColumn("_batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch_id").parquet(outDir)
-        ()
-      }
+    BatchSink.stream(docs, checkpointDir) { (batch, batchId) =>
+      import org.apache.spark.sql.functions._
+      // empty tokens excluded — the shared tokenization convention
+      // (Bm25.postings / QualityModel / t11; ADVICE r11)
+      BatchSink.writeBatch(Sketches.cmCounters(
+          batch.select(explode(split(col(textCol), " ")).as("tok"))
+            .filter(col("tok") =!= ""),
+          depth, width),
+        outDir, batchId)
+    }
 
   /** The stream's current sketch: cell-wise sum over the base plus all
     * live batch partials — interchangeable with a batch
@@ -251,21 +245,14 @@ object SketchStream {
   def histStream(docs: DataFrame, outDir: String, checkpointDir: String,
       textCol: String = "text")
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import org.apache.spark.sql.functions._
-        Sketches.logHistogram(
-            batch.selectExpr(s"CAST(size(split($textCol, ' ')) AS BIGINT) AS v"))
-          .select(lit(0).as("r"), col("bucket").cast("long").as("idx"),
-            col("cnt").as("c"))
-          .withColumn("_batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("_batch_id").parquet(outDir)
-        ()
-      }
+    BatchSink.stream(docs, checkpointDir) { (batch, batchId) =>
+      import org.apache.spark.sql.functions._
+      val hist = Sketches.logHistogram(
+          batch.selectExpr(s"CAST(size(split($textCol, ' ')) AS BIGINT) AS v"))
+        .select(lit(0).as("r"), col("bucket").cast("long").as("idx"),
+          col("cnt").as("c"))
+      BatchSink.writeBatch(hist, outDir, batchId)
+    }
 
   /** The stream's current histogram in `Sketches.histQuantiles` shape —
     * `mergedCounters` plus the cell→bucket projection, so everything
@@ -292,23 +279,16 @@ object SketchStream {
   def histStreamBy(docs: DataFrame, outDir: String, checkpointDir: String,
       keyCol: String = "source", textCol: String = "text")
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import org.apache.spark.sql.functions._
-        Sketches.logHistogramBy(
-            batch.selectExpr(s"$keyCol AS g",
-              s"CAST(size(split($textCol, ' ')) AS BIGINT) AS v"),
-            Seq("g"))
-          .select(col("g"), lit(0).as("r"), col("bucket").cast("long").as("idx"),
-            col("cnt").as("c"))
-          .withColumn("_batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("g", "_batch_id").parquet(outDir)
-        ()
-      }
+    BatchSink.stream(docs, checkpointDir) { (batch, batchId) =>
+      import org.apache.spark.sql.functions._
+      val hist = Sketches.logHistogramBy(
+          batch.selectExpr(s"$keyCol AS g",
+            s"CAST(size(split($textCol, ' ')) AS BIGINT) AS v"),
+          Seq("g"))
+        .select(col("g"), lit(0).as("r"), col("bucket").cast("long").as("idx"),
+          col("cnt").as("c"))
+      BatchSink.writeBatch(hist, outDir, batchId, "g")
+    }
 
   /** Current per-group histograms: the single-read `mergedCountersBy`
     * plus the cell→bucket projection — `Sketches.histQuantilesBy`

@@ -1,8 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
+import graft.BatchSink
 import graft.operators.TokenEmbeddingTable
 
 /** STREAMING refresh of the persisted (vec_id, embedding) token-vector
@@ -44,13 +45,9 @@ object VectorStoreStream {
       checkpointDir: String): DataStreamWriter[Row] = {
     val spark = docs.sparkSession
     val table = TokenEmbeddingTable.load(spark, tableDir)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        TokenEmbeddingTable.appendDocVecs(spark, storeDir, batch,
-          merges, bpePat, table)
-        ()
-      }
+    BatchSink.stream(docs, checkpointDir) { (batch, _) =>
+      TokenEmbeddingTable.appendDocVecs(spark, storeDir, batch,
+        merges, bpePat, table)
+    }
   }
 }

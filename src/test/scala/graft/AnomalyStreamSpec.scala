@@ -55,15 +55,13 @@ class AnomalyStreamSpec extends AnyFunSuite {
 
     // crash replay of wave 0's partial: dynamic overwrite of its own
     // partitions — the fold must be unchanged, not doubled
-    ev.filter(pmod(col("event_id"), lit(3)) === 0)
+    val daily = ev.filter(pmod(col("event_id"), lit(3)) === 0)
       .groupBy(col("event_type").as("g"),
         expr("CAST(datediff(date_trunc('day', ts), DATE '1970-01-01') AS BIGINT)")
           .as("idx"))
       .agg(count(lit(1)).as("c"))
       .select(col("g"), lit(0).as("r"), col("idx"), col("c"))
-      .withColumn("_batch_id", lit(0L))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("g", "_batch_id").parquet(s"$base/out")
+    BatchSink.writeBatch(daily, s"$base/out", 0L, "g")
     assert(rows(AnomalyStream.flags(spark, s"$base/out")) === batch,
       "replayed partial double-counted")
   }
@@ -111,12 +109,11 @@ class AnomalyStreamSpec extends AnyFunSuite {
         col("user_id").as("idx"))
       .agg(sum(expr("CAST(round(value * 100) AS BIGINT)")).as("cents"),
         count(lit(1)).as("n"))
-    agg.select(col("g"), lit(0).as("r"), col("idx"), col("cents").as("c"))
-      .unionByName(agg.select(col("g"), lit(1).as("r"), col("idx"),
-        col("n").as("c")))
-      .withColumn("_batch_id", lit(0L))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("g", "_batch_id").parquet(s"$base/out")
+    BatchSink.writeBatch(
+      agg.select(col("g"), lit(0).as("r"), col("idx"), col("cents").as("c"))
+        .unionByName(agg.select(col("g"), lit(1).as("r"), col("idx"),
+          col("n").as("c"))),
+      s"$base/out", 0L, "g")
     assert(rows(LeaderboardStream.topSpenders(spark, s"$base/out")) === batch)
   }
 }

@@ -90,10 +90,9 @@ class BpeStreamSpec extends AnyFunSuite {
       onePer = true)._2 === expected)
     // replay: re-run batch 0's body over the same out dir
     val (base, first) = run(Seq(rows.take(30)), onePer = false)
-    BpeTrainer.docTokenCounts(rows.take(30).toDF("doc_id", "text"), merges, pat)
-      .withColumn("_batch_id", lit(0L))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_batch_id").parquet(s"$base/out")
+    BatchSink.writeBatch(
+      BpeTrainer.docTokenCounts(rows.take(30).toDF("doc_id", "text"), merges, pat),
+      s"$base/out", 0L)
     assert(spark.read.parquet(s"$base/out")
       .select("doc_id", "n_pieces", "n_tokens")
       .collect().map(_.toString).toSet === first)
@@ -192,11 +191,9 @@ class BpeStreamSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$base/out")
       .select("_batch_id").distinct().count() >= 3L)
     // replay batch 0's body — the kept ids are unchanged
-    BpeTrainer.docTokenIdsWith(rows.take(55).toDF("doc_id", "text"),
-        loadedM, loadedV, pat)
-      .withColumn("_batch_id", lit(0L))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_batch_id").parquet(s"$base/out")
+    BatchSink.writeBatch(BpeTrainer.docTokenIdsWith(
+        rows.take(55).toDF("doc_id", "text"), loadedM, loadedV, pat),
+      s"$base/out", 0L)
     val replayed = spark.read.parquet(s"$base/out")
       .select("doc_id", "ids").collect()
       .map(r => r.getLong(0) -> r.getSeq[Int](1).toVector).toMap

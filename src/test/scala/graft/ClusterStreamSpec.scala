@@ -131,12 +131,10 @@ class ClusterStreamSpec extends AnyFunSuite {
   test("crash replay overwrites its own batch partition") {
     val (base, first) = run(Seq(rows.take(50)), onePer = false)
     // simulate replay of batch 0: re-run the same foreachBatch body
-    KMeans.assign(KMeans.quantized(rows.take(50).toDF("vec_id", "embedding")),
-        cents)
-      .withColumn("_batch_id", org.apache.spark.sql.functions.lit(0L))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_batch_id").parquet(s"$base/out")
+    BatchSink.writeBatch(
+      KMeans.assign(KMeans.quantized(rows.take(50).toDF("vec_id", "embedding")),
+        cents),
+      s"$base/out", 0L)
     assert(results(spark.read.parquet(s"$base/out")) === first,
       "replaying batch 0 changed the stored rows")
   }

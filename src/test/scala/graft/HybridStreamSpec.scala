@@ -269,10 +269,8 @@ class HybridStreamSpec extends AnyFunSuite {
     val (base, first) = run(Seq(queries), onePer = false)
     // simulate a replay of batch 0: the same fused result written again
     // under the same _batch_id must overwrite, not append
-    SparkEntry.queries("b13_hybrid_ann_served")(spark, sf)
-      .withColumn("_batch_id", lit(0L))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_batch_id").parquet(s"$base/out")
+    BatchSink.writeBatch(SparkEntry.queries("b13_hybrid_ann_served")(spark, sf),
+      s"$base/out", 0L)
     assert(results(spark.read.parquet(s"$base/out")) === first,
       "replayed batch must overwrite its own partition, not append")
   }

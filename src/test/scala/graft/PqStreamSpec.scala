@@ -70,10 +70,9 @@ class PqStreamSpec extends AnyFunSuite {
   test("crash replay overwrites its own batch partition") {
     val (base, first) = run(Seq(rows.take(50)), onePer = false)
     // simulate replay of batch 0: re-run the same foreachBatch body
-    PqIndex.encode(rows.take(50).toDF("vec_id", "embedding"), books)
-      .withColumn("_batch_id", lit(0L))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_batch_id").parquet(s"$base/out")
+    BatchSink.writeBatch(
+      PqIndex.encode(rows.take(50).toDF("vec_id", "embedding"), books),
+      s"$base/out", 0L)
     assert(results(spark.read.parquet(s"$base/out")) === first,
       "replayed batch must overwrite its own partition, not append")
   }

@@ -87,13 +87,11 @@ class SketchStreamSpec extends AnyFunSuite {
       "merged streamed partials diverge from the batch sketch")
     // crash replay: re-write batch 0's partial (dynamic overwrite of
     // its own partition) — the merge must be unchanged, not doubled
-    Sketches.cmCounters(
+    BatchSink.writeBatch(Sketches.cmCounters(
         waves.head.toDF("doc_id", "text")
           .select(explode(split(col("text"), " ")).as("tok"))
-          .filter(col("tok") =!= ""))
-      .withColumn("_batch_id", lit(0L))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_batch_id").parquet(s"$base/out")
+          .filter(col("tok") =!= "")),
+      s"$base/out", 0L)
     assert(merged() === batchCounters, "replayed partial double-counted")
     // one-sidedness survives the merge: estimate >= true count
     val trueCnt = docs.select(explode(split(col("text"), " ")).as("tok"))
@@ -144,13 +142,11 @@ class SketchStreamSpec extends AnyFunSuite {
 
     // crash replay of the un-folded newest batch: dynamic overwrite of
     // its own partition — merge unchanged, never doubled
-    Sketches.cmCounters(
+    BatchSink.writeBatch(Sketches.cmCounters(
         waves(2).toDF("doc_id", "text")
           .select(explode(split(col("text"), " ")).as("tok"))
-          .filter(col("tok") =!= ""))
-      .withColumn("_batch_id", lit(2L))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("_batch_id").parquet(s"$base/out")
+          .filter(col("tok") =!= "")),
+      s"$base/out", 2L)
     assert(merged() === batchCounters, "replayed live partial double-counted")
 
     // crash window: an ABSORBED partial resurrected on disk (base write
