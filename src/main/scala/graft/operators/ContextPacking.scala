@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * tokenization, which streams because it is per-document). Production
   * packing is a per-release batch step over a FROZEN document set;
   * re-packing a grown corpus is a new release (`saveWindows` to a new
-  * store, the IvfPq retrain-and-swap discipline), not an append.
+  * store, the `Artifacts.publish` swap), not an append.
   */
 object ContextPacking {
 

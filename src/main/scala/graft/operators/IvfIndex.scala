@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 
+import graft.Artifacts
 import graft.operators.{KMeans => KMeansOp}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -220,7 +221,7 @@ object IvfIndex {
     * crash run `repairPointers` BEFORE re-running the append — it
     * heals the orphans and the re-run's anti-join then skips them.
     * Single-writer per index: concurrent appends could interleave the
-    * two writes AND race the drift log's max(seq)+1 read-modify-write
+    * two writes AND race the drift log's `Artifacts.appendToLog` numbering
     * into duplicate seq values — serialization is the caller's
     * contract (ADVICE r16; `IvfPq.appendToSaved` carries the same
     * rule).
@@ -276,24 +277,14 @@ object IvfIndex {
       // delta-sized agg, no extra corpus pass. Baseline-less indexes
       // (saved before the metric existed) skip the record; re-save to
       // start tracking.
-      val basePath = new org.apache.hadoop.fs.Path(s"$dir/drift_baseline")
-      val bfs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (bfs.exists(basePath)) {
-        val base = spark.read.parquet(s"$dir/drift_baseline").collect()(0)
-        val baseDist = base.getAs[Double]("mean_dist")
+      Artifacts.readIfPresent(spark, s"$dir/drift_baseline").foreach { base =>
+        val baseDist = base.collect()(0).getAs[Double]("mean_dist")
         val (n, d) = meanAssignedDist(delta, idx.centers)
         if (n > 0 && baseDist > 0) {
           import spark.implicits._
-          val logPath = new org.apache.hadoop.fs.Path(s"$dir/drift_log")
-          val seq =
-            if (bfs.exists(logPath))
-              spark.read.parquet(s"$dir/drift_log")
-                .agg(max("seq")).collect()(0).getLong(0) + 1
-            else 1L
           val ratio = d / baseDist
-          Seq((seq, n, d, ratio, ratio > DriftRetrainRatio))
-            .toDF("seq", "n", "mean_dist", "ratio", "flagged")
-            .write.mode("append").parquet(s"$dir/drift_log")
+          Artifacts.appendToLog(Seq((n, d, ratio, ratio > DriftRetrainRatio))
+            .toDF("n", "mean_dist", "ratio", "flagged"), s"$dir/drift_log")
         }
       }
     }
@@ -356,11 +347,8 @@ object IvfIndex {
     */
   def driftStatus(spark: org.apache.spark.sql.SparkSession,
       dir: String): Option[DriftStatus] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/drift_log")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else spark.read.parquet(s"$dir/drift_log")
-      .orderBy(col("seq").desc).limit(1).collect().headOption
+    Artifacts.readIfPresent(spark, s"$dir/drift_log")
+      .flatMap(_.orderBy(col("seq").desc).limit(1).collect().headOption)
       .map(r => DriftStatus(r.getAs[Long]("seq"), r.getAs[Long]("n"),
         r.getAs[Double]("mean_dist"), r.getAs[Double]("ratio"),
         r.getAs[Boolean]("flagged")))
@@ -399,9 +387,7 @@ object IvfIndex {
     val rebuilt = build(corpus, nlist, seed, maxTrainRows,
       knownN = corpus.count())
     if (quantizedStore) saveQuantized(rebuilt, dir) else save(rebuilt, dir)
-    val logPath = new org.apache.hadoop.fs.Path(s"$dir/drift_log")
-    val fs = logPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(logPath)) { fs.delete(logPath, true); () }
+    Artifacts.remove(spark, s"$dir/drift_log")
     rebuilt
   }
 
@@ -433,25 +419,22 @@ object IvfIndex {
       .collect()
       .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
       .sortBy(_._1).toSeq
-    val byIdPath = new org.apache.hadoop.fs.Path(s"$dir/by_id")
-    val fs = byIdPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val byId = // absent on indexes saved before the pointer store existed;
-      // a pre-r9 store carried embeddings instead of cell pointers —
-      // treat it as absent too (searchPruned then falls back to the
-      // in-memory path rather than failing on the missing column)
-      if (fs.exists(byIdPath)) {
-        val df = spark.read.parquet(s"$dir/by_id")
-        if (df.columns.contains("cell")) Some(df)
-        else {
-          // surfaced so operators know query-id resolution on this index
-          // falls back to an unpruned corpus scan until it is re-saved
-          System.err.println(s"[graft] IvfIndex.load: $dir/by_id is a " +
-            "pre-pointer-store layout (embeddings, no cell column); " +
-            "discarding it — searchPruned will scan the assignment to " +
-            "resolve query ids. Re-save the index to restore pruning.")
-          None
-        }
-      } else None
+    // absent on indexes saved before the pointer store existed; a pre-r9
+    // store carried embeddings instead of cell pointers — treat it as
+    // absent too (searchPruned then falls back to the in-memory path
+    // rather than failing on the missing column)
+    val byId = Artifacts.readIfPresent(spark, s"$dir/by_id").flatMap { df =>
+      if (df.columns.contains("cell")) Some(df)
+      else {
+        // surfaced so operators know query-id resolution on this index
+        // falls back to an unpruned corpus scan until it is re-saved
+        System.err.println(s"[graft] IvfIndex.load: $dir/by_id is a " +
+          "pre-pointer-store layout (embeddings, no cell column); " +
+          "discarding it — searchPruned will scan the assignment to " +
+          "resolve query ids. Re-save the index to restore pruning.")
+        None
+      }
+    }
     val raw = spark.read.parquet(s"$dir/assigned")
     // a quantized store (saveQuantized) carries (scale, qvec) instead of
     // the float embedding — rebuild it lazily so every search path

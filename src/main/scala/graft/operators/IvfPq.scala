@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Artifacts
+
 /** IVF-PQ: the composed cell-pruned, codes-only ANN index (Jégou et
   * al. 2011 §V, the shape FAISS ships as `IndexIVFPQ`) — the 100 TB
   * vector-search workhorse this library's two halves were built for:
@@ -425,22 +427,20 @@ object IvfPq {
     * retrain) without ever needing the original corpus: the store
     * holds exact quantized vectors, so `KMeans.fitQ` + the residual
     * codebook fit reproduce what a from-scratch fit over the corpus
-    * would produce, bit for bit. The swap is the stage-then-rename
-    * discipline (`DsirStream.fitWeights`): the full new artifact is
-    * built at `.staging`, the live dir retires, staging publishes, and
-    * a concurrent `recoverRetired` resurrection is absorbed by one
-    * retire-and-retry. Serving sessions that loaded the OLD model keep
+    * would produce, bit for bit. The swap is `Artifacts.publish`: the
+    * full new artifact is built at a staging dir and renamed over the
+    * live one. Serving sessions that loaded the OLD model keep
     * working (their model state is driver-held and their codes/vectors
     * frames bound the old files); new sessions load the new artifact.
     */
   def retrain(spark: SparkSession, dir: String, nlist: Int, m: Int,
       k: Int, coarseIters: Int, pqIters: Int, dims: Int = 64,
       maxTrainRows: Long = 0L): Unit = {
-    // a prior retrain that crashed mid-swap leaves live stranded at
-    // `.retired` — self-heal before reading, exactly as loadModel does
-    // (a bare parquet-read failure here would force manual recovery of
-    // a window the machinery already knows how to close)
-    recoverRetired(spark, dir)
+    // a prior retrain that crashed mid-swap leaves live stranded —
+    // self-heal before reading, exactly as loadModel does (a bare
+    // parquet-read failure here would force manual recovery of a
+    // window the machinery already knows how to close)
+    Artifacts.recoverRetired(spark, dir)
     val q = spark.read.parquet(s"$dir/vectors")
       .select("vec_id", "qv").localCheckpoint()
     val cents = KMeans.fitQ(q, nlist, coarseIters, dims,
@@ -448,26 +448,7 @@ object IvfPq {
     val books = PqIndex.fitQuantized(
       residuals(q, cents).localCheckpoint(), m, k, pqIters, dims,
       maxTrainRows = maxTrainRows)
-    val staging = dir + ".staging"
-    saveQ(q, staging, cents, books, dims)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val live = new org.apache.hadoop.fs.Path(dir)
-    val fs = live.getFileSystem(hconf)
-    val retired = new org.apache.hadoop.fs.Path(dir + ".retired")
-    if (fs.exists(retired)) fs.delete(retired, true)
-    require(fs.rename(live, retired), s"could not retire $dir")
-    val stagingPath = new org.apache.hadoop.fs.Path(staging)
-    if (!fs.rename(stagingPath, live)) {
-      if (fs.exists(live)) {
-        if (fs.exists(retired)) fs.delete(retired, true)
-        require(fs.rename(live, retired),
-          s"could not re-retire resurrected $dir")
-      }
-      require(fs.rename(stagingPath, live),
-        s"could not publish $staging to $dir")
-    }
-    fs.delete(retired, true)
-    ()
+    Artifacts.publish(spark, dir)(saveQ(q, _, cents, books, dims))
   }
 
   /** The measured recall@k of one `recallStatus` run: `recall` is the
@@ -508,7 +489,7 @@ object IvfPq {
     * is the n1/n2 documented baseline shape, linear in store size per
     * batch, which is what makes this a sampled release gate, not a
     * per-query path. `log = true` appends the measurement to
-    * `dir/recall_log` (drift_log's twin; read back via
+    * `dir/recall_log` (an `Artifacts.appendToLog` series, read back via
     * `recallHistory`), so the gate keeps its series next to the
     * artifact it judges.
     */
@@ -575,27 +556,16 @@ object IvfPq {
     val recall = if (nq == 0) 0.0 else row.getAs[Double]("recall")
     val status = RecallStatus(nq, k, nprobe, recall,
       nq > 0 && recall < threshold)
-    // Audit trail, drift_log's twin (`log = true` — the scheduled-gate
-    // pattern: measure on a held-out sample after each append wave,
-    // keep the series next to the artifact it judges). Same max(seq)+1
-    // read-modify-write as the drift log, hence the same single-writer
-    // contract; `retrain`'s directory swap retires the series with the
-    // model it measured.
+    // Audit trail (`log = true` — the scheduled-gate pattern: measure
+    // on a held-out sample after each append wave, keep the series next
+    // to the artifact it judges). Single-writer like every
+    // `Artifacts.appendToLog` series; `retrain`'s directory swap
+    // retires the series with the model it measured.
     if (log && nq > 0) {
       import spark.implicits._
-      val logPath = new org.apache.hadoop.fs.Path(s"$dir/recall_log")
-      val lfs = logPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // coalesce: a log directory that exists but holds zero rows (a
-      // first write that crashed after directory creation) must restart
-      // the series at 1, not NPE on a null max (ADVICE r18)
-      val seq =
-        if (lfs.exists(logPath))
-          spark.read.parquet(s"$dir/recall_log")
-            .agg(coalesce(max("seq"), lit(0L))).first().getLong(0) + 1
-        else 1L
-      Seq((seq, nq, k, nprobe, recall, status.flagged))
-        .toDF("seq", "n_queries", "k", "nprobe", "recall", "flagged")
-        .write.mode("append").parquet(s"$dir/recall_log")
+      Artifacts.appendToLog(Seq((nq, k, nprobe, recall, status.flagged))
+        .toDF("n_queries", "k", "nprobe", "recall", "flagged"),
+        s"$dir/recall_log")
     }
     status
   }
@@ -645,16 +615,12 @@ object IvfPq {
   }
 
   /** The persisted recall series (`recallStatus(log = true)` rows,
-    * seq-ordered) — None before the first logged measurement, the
-    * `driftStatus` read discipline.
+    * seq-ordered) — None before the first logged measurement
+    * (`Artifacts.readIfPresent`).
     */
   def recallHistory(spark: SparkSession,
-      dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/recall_log")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else Some(spark.read.parquet(s"$dir/recall_log").orderBy("seq"))
-  }
+      dir: String): Option[DataFrame] =
+    Artifacts.readIfPresent(spark, s"$dir/recall_log").map(_.orderBy("seq"))
 
   /** The gate-chosen serving knobs of a saved artifact (VERDICT r18
     * #1): `kCand` is the smallest ladder value whose measured served
@@ -866,20 +832,15 @@ object IvfPq {
   private def writeKnobs(spark: SparkSession, dir: String,
       knobs: Knobs): Unit = {
     import spark.implicits._
-    // stage-then-rename (the model-artifact swap discipline, ADVICE
-    // r19): an in-place overwrite that crashed after directory creation
-    // would leave an existing-but-empty knobs dir for every later read
-    val live = new org.apache.hadoop.fs.Path(s"$dir/knobs")
-    val staging = new org.apache.hadoop.fs.Path(s"$dir/knobs.staging")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq((knobs.nlist, knobs.kCand, knobs.nprobe, knobs.sampleN,
-        knobs.meanRecallE6))
-      .toDF("nlist", "k_cand", "nprobe", "sample_n", "mean_recall_e6")
-      .coalesce(1).write.mode("overwrite").parquet(staging.toString)
-    if (fs.exists(live)) fs.delete(live, true)
-    require(fs.rename(staging, live),
-      s"could not publish $staging to $live")
-    ()
+    // `Artifacts.publish` (ADVICE r19): an in-place overwrite that
+    // crashed after directory creation would leave an existing-but-empty
+    // knobs dir for every later read
+    Artifacts.publish(spark, s"$dir/knobs") { staging =>
+      Seq((knobs.nlist, knobs.kCand, knobs.nprobe, knobs.sampleN,
+          knobs.meanRecallE6))
+        .toDF("nlist", "k_cand", "nprobe", "sample_n", "mean_recall_e6")
+        .coalesce(1).write.mode("overwrite").parquet(staging)
+    }
   }
 
   /** The persisted gate-chosen knobs — None before the first
@@ -890,18 +851,16 @@ object IvfPq {
     * new writes can no longer leave this state, see `writeKnobs`).
     */
   def loadKnobs(spark: SparkSession, dir: String): Option[Knobs] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/knobs")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a crash inside `writeKnobs`' swap strands the knobs like a model
+    Artifacts.recoverRetired(spark, s"$dir/knobs")
     // a directory holding no parquet part-files at all (crash between
-    // mkdir and the first file) cannot even infer a schema — same
-    // verdict as zero rows: no knobs were ever published
-    if (!fs.exists(p) ||
-        !fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet")))
-      None
-    else spark.read.parquet(s"$dir/knobs").collect().headOption.map(r =>
-      Knobs(r.getAs[Int]("nlist"), r.getAs[Int]("k_cand"),
-        r.getAs[Int]("nprobe"), r.getAs[Long]("sample_n"),
-        r.getAs[Long]("mean_recall_e6")))
+    // mkdir and the first file) reads as absent — same verdict as zero
+    // rows: no knobs were ever published
+    Artifacts.readIfPresent(spark, s"$dir/knobs")
+      .flatMap(_.collect().headOption).map(r =>
+        Knobs(r.getAs[Int]("nlist"), r.getAs[Int]("k_cand"),
+          r.getAs[Int]("nprobe"), r.getAs[Long]("sample_n"),
+          r.getAs[Long]("mean_recall_e6")))
   }
 
   /** `retrain` with the nlist DERIVED from the artifact's own vector-
@@ -916,7 +875,7 @@ object IvfPq {
       coarseIters: Int, pqIters: Int, dims: Int = 64,
       targetPop: Long = 512L, minNlist: Int = 16,
       maxNlist: Int = 256, maxTrainRows: Long = 0L): Int = {
-    recoverRetired(spark, dir)
+    Artifacts.recoverRetired(spark, dir)
     val n = spark.read.parquet(s"$dir/vectors").count()
     val nlist = SimilarityOps.deriveNlist(n, targetPop, minNlist, maxNlist)
     retrain(spark, dir, nlist, m, k, coarseIters, pqIters, dims,
@@ -944,7 +903,7 @@ object IvfPq {
     * flagged and the ladder has a deeper rung, retrain the artifact at
     * the next `m` (a full refit from its own vector store with
     * scale-DERIVED nlist — the `retrainDerived` machinery, atomic
-    * stage-then-rename swap), then re-run the 2-D gate on the
+    * `Artifacts.publish` swap), then re-run the 2-D gate on the
     * republished artifact and persist the knobs it chooses. An
     * artifact that flags itself can now retrain its way out instead of
     * waiting for a human to edit a constant and rebuild.
@@ -976,7 +935,7 @@ object IvfPq {
       s"m ladder must be ascending and duplicate-free: $mLadder")
     require(mLadder.forall(dims % _ == 0),
       s"every m rung must divide dims=$dims: $mLadder")
-    recoverRetired(spark, dir)
+    Artifacts.recoverRetired(spark, dir)
     def gate(): Knobs = selectKnobsSaved(spark, dir, nprobeLadder, topK,
       kCandLadder, sampleMax, dims, floorE6)
     var m = loadModel(spark, dir)._2.length
@@ -989,27 +948,6 @@ object IvfPq {
       knobs = gate()
     }
     DeepenStatus(m, knobs, knobs.meanRecallE6 < floorE6)
-  }
-
-  /** Crash recovery for `retrain`'s two-rename swap (the
-    * `DsirStream.recoverRetired` contract): a retrain that died between
-    * retiring live and publishing staging leaves the old artifact at
-    * `.retired` and live missing — rename it back so serving keeps
-    * working under the old model until the next successful retrain.
-    * `loadModel` calls this first, so the window self-heals on the next
-    * serve session; no-op (one existence check) on a healthy store.
-    */
-  def recoverRetired(spark: SparkSession, dir: String): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val live = new org.apache.hadoop.fs.Path(dir)
-    val fs = live.getFileSystem(hconf)
-    val retired = new org.apache.hadoop.fs.Path(dir + ".retired")
-    if (!fs.exists(live) && fs.exists(retired)) {
-      if (!fs.rename(retired, live))
-        require(fs.exists(live),
-          s"could not restore $retired to $dir")
-      ()
-    }
   }
 
   /** Append new vectors to a saved artifact UNDER THE FROZEN MODEL —
@@ -1034,11 +972,11 @@ object IvfPq {
     * codes store, so a crash-replayed append finds the orphans already
     * coded and skips them — idempotence no longer relies on the
     * operator remembering to run the healer between crash and replay
-    * (the `retrain`/`loadModel` → `recoverRetired` self-heal
+    * (the `retrain`/`loadModel` → `Artifacts.recoverRetired` self-heal
     * discipline). Cost on a healthy store: one extra pair of
     * vec_id-only column-pruned projections. Single-writer per artifact:
     * concurrent appends could interleave the two writes AND race the
-    * drift log's max(seq)+1 read-modify-write into duplicate seq
+    * drift log's `Artifacts.appendToLog` numbering into duplicate seq
     * values — serialization is the caller's contract (the `IvfIndex`
     * append contract), not something two blind `mode("append")`
     * writers can provide.
@@ -1089,26 +1027,15 @@ object IvfPq {
         .write.mode("append").parquet(s"$dir/vectors")
       encDelta.write.mode("append").partitionBy("cell")
         .parquet(s"$dir/codes")
-      val basePath = new org.apache.hadoop.fs.Path(s"$dir/err_baseline")
-      val bfs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (bfs.exists(basePath)) {
-        val base = spark.read.parquet(s"$dir/err_baseline").collect()(0)
-          .getAs[Double]("mean_err2")
+      Artifacts.readIfPresent(spark, s"$dir/err_baseline").foreach { b =>
+        val base = b.collect()(0).getAs[Double]("mean_err2")
         val d = encDelta.agg(avg(col("err2").cast("double")))
           .first().getDouble(0)
         if (base > 0) {
-          val logPath = new org.apache.hadoop.fs.Path(s"$dir/drift_log")
-          // coalesce as in the recall log: an existing-but-empty log
-          // restarts the series instead of NPEing (ADVICE r18)
-          val seq =
-            if (bfs.exists(logPath))
-              spark.read.parquet(s"$dir/drift_log")
-                .agg(coalesce(max("seq"), lit(0L))).first().getLong(0) + 1
-            else 1L
           val ratio = d / base
-          Seq((seq, appended, d, ratio, ratio > IvfIndex.DriftRetrainRatio))
-            .toDF("seq", "n", "mean_err2", "ratio", "flagged")
-            .write.mode("append").parquet(s"$dir/drift_log")
+          Artifacts.appendToLog(
+            Seq((appended, d, ratio, ratio > IvfIndex.DriftRetrainRatio))
+              .toDF("n", "mean_err2", "ratio", "flagged"), s"$dir/drift_log")
         }
       }
     }
@@ -1163,7 +1090,7 @@ object IvfPq {
     */
   def loadModel(spark: SparkSession,
       dir: String): (Seq[Array[Long]], Seq[Seq[Array[Long]]]) = {
-    recoverRetired(spark, dir)
+    Artifacts.recoverRetired(spark, dir)
     val cRows = spark.read.parquet(s"$dir/cents").orderBy("cell").collect()
     require(cRows.nonEmpty, s"no centroids at $dir/cents — not an IVF-PQ artifact")
     require(cRows.map(_.getAs[Int]("cell")).toSeq == (0 until cRows.length),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.BatchSink
+import graft.{Artifacts, BatchSink}
 import graft.operators.KMeans
 
 /** STREAMING cluster assignment over a frozen k-means fit — the online
@@ -65,7 +65,11 @@ object ClusterStream {
     */
   def route(vecs: DataFrame, cents: Seq[Array[Long]], outDir: String,
       checkpointDir: String,
-      monitorDir: Option[String] = None): DataStreamWriter[Row] =
+      monitorDir: Option[String] = None): DataStreamWriter[Row] = {
+    // the baseline is fixed for the stream's life, like the centroids:
+    // `rebaseline` rewrites it only while the stream is stopped
+    val monitor = monitorDir.map(m =>
+      (m, vecs.sparkSession.read.parquet(s"$m/baseline").collect()(0).getDouble(1)))
     BatchSink.stream(vecs, checkpointDir) { (batch, batchId) =>
       // persist (not localCheckpoint): the assignment is reused by
       // the route write and the monitor aggregate WITHIN this batch
@@ -77,11 +81,9 @@ object ClusterStream {
         .persist()
       try {
         BatchSink.writeBatch(asg, outDir, batchId)
-        monitorDir.foreach { m =>
+        monitor.foreach { case (m, baseMean) =>
           val spark = batch.sparkSession
           import spark.implicits._
-          val base = spark.read.parquet(s"$m/baseline").collect()(0)
-          val baseMean = base.getDouble(1)
           val r = asg.agg(count(lit(1)).as("n"), avg(col("dist2")).as("d"))
             .collect()(0)
           val n = r.getLong(0)
@@ -108,19 +110,16 @@ object ClusterStream {
         }
       } finally asg.unpersist()
     }
+  }
 
   /** Latest drift record, `None` until the first monitored batch. */
   def driftStatus(spark: org.apache.spark.sql.SparkSession,
-      monitorDir: String): Option[RouteDrift] = {
-    val p = new org.apache.hadoop.fs.Path(s"$monitorDir/drift_log")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else spark.read.parquet(s"$monitorDir/drift_log")
-      .orderBy(col("seq").desc).limit(1).collect().headOption
+      monitorDir: String): Option[RouteDrift] =
+    Artifacts.readIfPresent(spark, s"$monitorDir/drift_log")
+      .flatMap(_.orderBy(col("seq").desc).limit(1).collect().headOption)
       .map(r => RouteDrift(r.getAs[Long]("seq"), r.getAs[Long]("n"),
         r.getAs[Double]("mean_dist2"), r.getAs[Double]("ratio"),
         r.getAs[Boolean]("flagged")))
-  }
 
   /** The ACTION face (the IvfIndex.retrain pattern at this tier): refit
     * the quantizer on a current corpus slice, reset the baseline to the
@@ -131,12 +130,9 @@ object ClusterStream {
     */
   def rebaseline(emb: DataFrame, k: Int, iters: Int, monitorDir: String,
       dims: Int = 64): Seq[Array[Long]] = {
-    val spark = emb.sparkSession
     val cents = KMeans.fit(emb, k, iters, dims)
     writeBaseline(emb, cents, monitorDir)
-    val logPath = new org.apache.hadoop.fs.Path(s"$monitorDir/drift_log")
-    val fs = logPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(logPath)) { fs.delete(logPath, true); () }
+    Artifacts.remove(emb.sparkSession, s"$monitorDir/drift_log")
     cents
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.BatchSink
+import graft.{Artifacts, BatchSink}
 import graft.operators.QualityModel
 
 /** The STREAMING face of `CorpusPipeline`: continuous corpus ingestion
@@ -18,7 +18,7 @@ import graft.operators.QualityModel
   * holding (sig, doc_id) — ~50 B/doc, append-only — plus
   * `indexDir/_meta` persisting n_buckets (a layout property: entries
   * are findable only under the modulus they were written with, so the
-  * persisted value wins over the parameter on every batch after the
+  * persisted value wins over the parameter on every stream after the
   * first). A batch reads ONLY the buckets its own signatures hash to
   * (the DocStream partition-pruned lookup), so per-batch index IO is
   * bounded by batch size, not stream history.
@@ -44,32 +44,29 @@ object CorpusStream {
 
   /** The index's bucket count is a LAYOUT property: entries are
     * findable only under the modulus they were written with, so it is
-    * persisted in `indexDir/_meta` on first write and every later batch
-    * (or a restarted stream configured differently) uses the PERSISTED
+    * persisted in `indexDir/_meta` on first use and every later stream
+    * (a restart configured differently included) uses the PERSISTED
     * value — a silent mismatch would skip stored duplicates (review
-    * r12; the Bm25 stats/n_buckets precedent).
+    * r12; the Bm25 stats/n_buckets precedent). Read once per stream
+    * definition: the value never changes once written.
     */
   private[streaming] def persistedBuckets(spark: SparkSession,
-      indexDir: String, nBuckets: Int): Int = {
-    val metaPath = new org.apache.hadoop.fs.Path(s"$indexDir/_meta")
-    val mfs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (mfs.exists(metaPath))
-      spark.read.parquet(s"$indexDir/_meta")
-        .select("n_buckets").head().getInt(0)
-    else {
-      import spark.implicits._
-      Seq(nBuckets).toDF("n_buckets")
-        .write.mode("overwrite").parquet(s"$indexDir/_meta")
-      nBuckets
-    }
-  }
+      indexDir: String, nBuckets: Int): Int =
+    Artifacts.readIfPresent(spark, s"$indexDir/_meta")
+      .flatMap(_.select("n_buckets").collect().headOption.map(_.getInt(0)))
+      .getOrElse {
+        import spark.implicits._
+        Seq(nBuckets).toDF("n_buckets")
+          .write.mode("overwrite").parquet(s"$indexDir/_meta")
+        nBuckets
+      }
 
   def cleanStream(docs: DataFrame, indexDir: String, outDir: String,
       checkpointDir: String, dims: Int = 1024, threshold: Long = 0L,
-      nBuckets: Int = 64): DataStreamWriter[Row] =
+      nBuckets: Int = 64): DataStreamWriter[Row] = {
+    val nB = persistedBuckets(docs.sparkSession, indexDir, nBuckets)
     BatchSink.stream(docs, checkpointDir) { (batch, batchId) =>
       val spark = batch.sparkSession
-      val nB = persistedBuckets(spark, indexDir, nBuckets)
       // set semantics per doc_id (at-least-once sources)
       val b0 = batch.dropDuplicates("doc_id")
       // 1. quality gate — BEFORE dedup, the CorpusPipeline order: a
@@ -90,21 +87,19 @@ object CorpusStream {
       val touched = repRows.select("sigbucket").distinct()
         .collect().map(_.getInt(0)).toSeq
       val entriesDir = s"$indexDir/entries"
-      val entriesPath = new org.apache.hadoop.fs.Path(entriesDir)
-      val fs = entriesPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val kept = (
-        if (fs.exists(entriesPath) && touched.nonEmpty) {
-          val idx = spark.read.parquet(entriesDir)
-            .filter(col("sigbucket").isin(touched: _*))
-            .select(col("sig"), col("doc_id").as("_old_id"))
-          repRows.join(idx, Seq("sig"), "left")
-            .groupBy(repRows.columns.map(col): _*)
-            .agg(min(when(col("_old_id") =!= col("doc_id"), col("_old_id")))
-              .as("_matched"))
-            .filter(col("_matched").isNull)
-            .drop("_matched")
-        } else repRows
-      ).localCheckpoint()
+      val stored =
+        if (touched.isEmpty) None else Artifacts.readIfPresent(spark, entriesDir)
+      val kept = stored.fold(repRows) { entries =>
+        val idx = entries
+          .filter(col("sigbucket").isin(touched: _*))
+          .select(col("sig"), col("doc_id").as("_old_id"))
+        repRows.join(idx, Seq("sig"), "left")
+          .groupBy(repRows.columns.map(col): _*)
+          .agg(min(when(col("_old_id") =!= col("doc_id"), col("_old_id")))
+            .as("_matched"))
+          .filter(col("_matched").isNull)
+          .drop("_matched")
+      }.localCheckpoint()
       // 4. split assign + cleaned output, idempotent per batch
       val cleaned = kept
         .withColumn("n_tokens",
@@ -119,4 +114,5 @@ object CorpusStream {
         .repartition(col("sigbucket"))
         .write.mode("append").partitionBy("sigbucket").parquet(entriesDir)
     }
+  }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.BatchSink
+import graft.{Artifacts, BatchSink}
 import graft.operators.{Dsir, QualityModel}
 
 /** STREAMING DSIR importance gating — the in-flight face of the x7
@@ -45,74 +45,12 @@ object DsirStream {
         explode(split(col(textCol), " ")).as("token"))
       .filter(col("token") =!= "")
       .select(col("source"), QualityModel.tokenBucket(col("token"), dims).as("b"))
-    // Stage-then-swap: `overwrite` straight onto weightsDir is
-    // delete-then-write, leaving a window the LENGTH OF THE FIT JOB in
-    // which a concurrent micro-batch's per-batch read (`scoreBatch`)
-    // sees a missing or partially-written table. The full job runs
-    // against a staging path; the visible dir is then replaced by two
-    // filesystem renames (metadata ops). RESIDUAL window: two renames
-    // are not one atomic swap — between retiring live and publishing
-    // staging, live briefly does not exist, and a crash in that gap
-    // leaves the old table stranded at `.retired`. Both are covered by
-    // `recoverRetired` (called by every `scoreBatch`): a read that
-    // finds live missing but `.retired` present renames the old table
-    // back, so the in-flight-swap race degrades to a retry-able read
-    // of the OLD table and a crash between the renames self-heals on
-    // the next scoring call.
-    val staging = weightsDir + ".staging"
-    Dsir.weights(toks, col("source").isin(targetSources: _*), dims)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(staging)
-    val hconf = docs.sparkSession.sparkContext.hadoopConfiguration
-    val live = new org.apache.hadoop.fs.Path(weightsDir)
-    val fs = live.getFileSystem(hconf)
-    val retired = new org.apache.hadoop.fs.Path(weightsDir + ".retired")
-    if (fs.exists(retired)) fs.delete(retired, true)
-    if (fs.exists(live))
-      require(fs.rename(live, retired), s"could not retire $weightsDir")
-    // Publish, tolerating one concurrent `recoverRetired` resurrection:
-    // a scoreBatch running inside the swap window can rename
-    // .retired → live back (it legitimately reads the OLD table), which
-    // makes this rename fail with the destination present. That live is
-    // the table we just retired, not a competing writer — retire it
-    // again and retry the publish once. A second failure is a real
-    // filesystem problem and throws with the staging path intact.
-    val stagingPath = new org.apache.hadoop.fs.Path(staging)
-    if (!fs.rename(stagingPath, live)) {
-      if (fs.exists(live)) {
-        if (fs.exists(retired)) fs.delete(retired, true)
-        require(fs.rename(live, retired),
-          s"could not re-retire resurrected $weightsDir")
-      }
-      require(fs.rename(stagingPath, live),
-        s"could not publish $staging to $weightsDir")
-    }
-    fs.delete(retired, true)
-    ()
-  }
-
-  /** Crash recovery for the two-rename swap: if a `fitWeights` died
-    * between retiring the live table and publishing staging, the data
-    * is stranded at `.retired` and live is missing — rename it back so
-    * scoring keeps working under the old table until the next
-    * successful refit. No-op (one existence check) on a healthy store.
-    */
-  private[streaming] def recoverRetired(spark: SparkSession,
-      weightsDir: String): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val live = new org.apache.hadoop.fs.Path(weightsDir)
-    val fs = live.getFileSystem(hconf)
-    val retired = new org.apache.hadoop.fs.Path(weightsDir + ".retired")
-    if (!fs.exists(live) && fs.exists(retired)) {
-      // Two concurrent scoreBatch calls can both pass the checks above;
-      // the loser's rename fails because the winner already restored
-      // live (or a racing fitWeights just published the NEW table).
-      // Either way the store is healthy — only throw if live is STILL
-      // missing after the failed rename.
-      if (!fs.rename(retired, live))
-        require(fs.exists(live),
-          s"could not restore $retired to $weightsDir")
-      ()
+    // stage-then-swap, so a concurrent `scoreBatch` never reads a
+    // missing or half-written table (`Artifacts.publish`)
+    Artifacts.publish(docs.sparkSession, weightsDir) { staging =>
+      Dsir.weights(toks, col("source").isin(targetSources: _*), dims)
+        .coalesce(1)
+        .write.mode("overwrite").parquet(staging)
     }
   }
 
@@ -129,7 +67,7 @@ object DsirStream {
   def scoreBatch(docs: DataFrame, weightsDir: String,
       dims: Int = 1024): DataFrame = {
     val spark = docs.sparkSession
-    recoverRetired(spark, weightsDir)
+    Artifacts.recoverRetired(spark, weightsDir)
     val w = spark.read.parquet(weightsDir)
     docs.select(col("doc_id"), col("source"),
         explode(split(col("text"), " ")).as("token"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.BatchSink
+import graft.{Artifacts, BatchSink}
 import graft.operators.DedupOps
 
 /** The STREAMING face of paragraph-level dedup (d12): documents arrive
@@ -43,10 +43,10 @@ object ParagraphStream {
 
   def cleanStream(docs: DataFrame, indexDir: String, outDir: String,
       checkpointDir: String, segTokens: Int = 10,
-      nBuckets: Int = 64): DataStreamWriter[Row] =
+      nBuckets: Int = 64): DataStreamWriter[Row] = {
+    val nB = CorpusStream.persistedBuckets(docs.sparkSession, indexDir, nBuckets)
     BatchSink.stream(docs, checkpointDir) { (batch, batchId) =>
       val spark = batch.sparkSession
-      val nB = CorpusStream.persistedBuckets(spark, indexDir, nBuckets)
       val b0 = batch.dropDuplicates("doc_id")
       // segment + within-batch owner (d12's min-okey rule)
       val seg = DedupOps.segments(b0, "doc_id", "text", segTokens)
@@ -61,21 +61,19 @@ object ParagraphStream {
       val touched = batchKept.select("hbucket").distinct()
         .collect().map(_.getInt(0)).toSeq
       val entriesDir = s"$indexDir/entries"
-      val entriesPath = new org.apache.hadoop.fs.Path(entriesDir)
-      val fs = entriesPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val kept = (
-        if (fs.exists(entriesPath) && touched.nonEmpty) {
-          val idx = spark.read.parquet(entriesDir)
-            .filter(col("hbucket").isin(touched: _*))
-            .select(col("h"), col("okey").as("_old"))
-          batchKept.join(idx, Seq("h"), "left")
-            .groupBy(batchKept.columns.map(col): _*)
-            .agg(min(when(expr("_old div 1000000L") =!= col("doc_id"),
-                col("_old"))).as("_foreign"))
-            .filter(col("_foreign").isNull)
-            .drop("_foreign")
-        } else batchKept
-      ).localCheckpoint()
+      val stored =
+        if (touched.isEmpty) None else Artifacts.readIfPresent(spark, entriesDir)
+      val kept = stored.fold(batchKept) { entries =>
+        val idx = entries
+          .filter(col("hbucket").isin(touched: _*))
+          .select(col("h"), col("okey").as("_old"))
+        batchKept.join(idx, Seq("h"), "left")
+          .groupBy(batchKept.columns.map(col): _*)
+          .agg(min(when(expr("_old div 1000000L") =!= col("doc_id"),
+              col("_old"))).as("_foreign"))
+          .filter(col("_foreign").isNull)
+          .drop("_foreign")
+      }.localCheckpoint()
       // reassemble: every batch doc emits a row; fully-cut docs empty
       val rebuilt = kept.groupBy("doc_id")
         .agg(count(lit(1)).as("n_kept"),
@@ -95,4 +93,5 @@ object ParagraphStream {
         .repartition(col("hbucket"))
         .write.mode("append").partitionBy("hbucket").parquet(entriesDir)
     }
+  }
 }
