@@ -111,10 +111,17 @@ object Artifacts {
   /** Append `rows` to the log at `logDir` behind a leading `seq` column,
     * one past the log's largest (1 on an absent or empty log). A
     * read-modify-write: one writer per log.
+    *
+    * A stale `<logDir>/_temporary` is deleted first. It can only be
+    * left by a crashed append (one writer), and Hadoop's v1 committer
+    * would otherwise publish that job's committed task output
+    * (`_temporary/0/task_*`) into the log at the next job commit.
     */
   def appendToLog(rows: DataFrame, logDir: String): Unit = {
-    val seq = readIfPresent(rows.sparkSession, logDir)
+    val spark = rows.sparkSession
+    val seq = readIfPresent(spark, logDir)
       .fold(0L)(_.agg(coalesce(max("seq"), lit(0L))).first().getLong(0)) + 1
+    remove(spark, s"$logDir/_temporary")
     rows.select(lit(seq).as("seq") +: rows.columns.map(col): _*)
       .write.mode("append").parquet(logDir)
   }

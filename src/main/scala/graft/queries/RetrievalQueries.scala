@@ -93,6 +93,43 @@ object RetrievalQueries extends QueryPack {
   private val EmbDotQQ = edot("qe", "qe")
   private val EmbDotNN = edot("ne", "ne")
 
+  /** The t38 token-table vectors in SQL: `TokDimSums` sums each of the
+    * 16 dimensions' per-id weights, `TokDimVec` mean-pools the sums to
+    * the e3 fixed-point vector (TokenEmbeddingTable's twin).
+    */
+  private def teWeightSql(dd: Int) =
+    s"((CAST(('0x' || substr(md5('te:$dd:' || CAST(id AS VARCHAR)), 1, 8)) AS BIGINT) % 2001) - 1000)"
+  private val TokDimSums = (0 until 16).map(dd =>
+    s"CAST(sum(${teWeightSql(dd)}) AS BIGINT) AS s$dd").mkString(", ")
+  private val TokDimVec = (0 until 16).map(dd =>
+    s"CAST((s$dd * 1000) // n AS DOUBLE)").mkString(", ")
+
+  /** The integer-RRF fusion tail of the hybrid oracles (b11–b15), the
+    * SQL twin of `RankFusion.rrf`: the lexical list `lexRel` and the
+    * dense list `densec` fuse per (keys…, query_id), and the top HybK
+    * per key come out ordered.
+    */
+  private def fusionSql(lexRel: String, keys: Seq[String]): String = {
+    val k = keys.map(_ + ", ").mkString
+    val out = keys ++ Seq("query_id", "CAST(rnk AS INTEGER) AS rnk",
+      "doc_id", "rrf_e12", "CAST(n_lists AS BIGINT) AS n_lists")
+    s"""fus AS (SELECT ${k}query_id, doc_id,
+                 1000000000000 // (60 + rnk) AS contrib FROM $lexRel
+               UNION ALL
+               SELECT ${k}query_id, doc_id, 1000000000000 // (60 + rnk)
+               FROM densec),
+             ff AS (SELECT ${k}query_id, doc_id,
+               CAST(sum(contrib) AS BIGINT) AS rrf_e12,
+               count(*) AS n_lists FROM fus GROUP BY ${(1 to keys.size + 2).mkString(", ")}),
+             ffr AS (SELECT ${k}query_id, doc_id, rrf_e12, n_lists,
+               row_number() OVER (PARTITION BY ${k}query_id
+                 ORDER BY rrf_e12 DESC, doc_id) AS rnk
+               FROM ff)
+           SELECT ${out.take(4).mkString(", ")},
+             ${out.drop(4).mkString(", ")}
+           FROM ffr WHERE rnk <= $HybK ORDER BY ${k}query_id, rnk"""
+  }
+
   /** The b3/b4 oracle: DuckDB replays the WHOLE multi-term fixed-point
     * scoring — query-term postings, exact df, the guarded idf_e6
     * integer (Bm25.idfE6: floor(ln-idf · 1e6), portable because the
@@ -164,19 +201,15 @@ object RetrievalQueries extends QueryPack {
     * string for both faces (ad-hoc derivation and loaded artifact), so
     * the served table cannot drift from the derived one.
     */
-  private val TokenEmbKnnOracle: String = {
-    def wSql(dd: Int) =
-      s"((CAST(('0x' || substr(md5('te:$dd:' || CAST(id AS VARCHAR)), 1, 8)) AS BIGINT) % 2001) - 1000)"
+  private val TokenEmbKnnOracle: String =
     s"""${graft.operators.BpeTrainer.docTokenIdCtes(
         TextQueries.BpePat, TextQueries.BpeK)},
          tw AS (SELECT doc_id, v.id AS id FROM dtok JOIN vfull v USING (tok)),
          em AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n,
-           ${(0 until 16).map(dd =>
-            s"CAST(sum(${wSql(dd)}) AS BIGINT) AS s$dd").mkString(", ")}
+           $TokDimSums
            FROM tw GROUP BY doc_id),
          tvec AS (SELECT doc_id,
-           [${(0 until 16).map(dd =>
-            s"CAST((s$dd * 1000) // n AS DOUBLE)").mkString(", ")}] AS v
+           [$TokDimVec] AS v
            FROM em),
          nz AS (SELECT doc_id, v FROM tvec
            WHERE list_reduce(list_transform(v, x -> x * x), (a, x) -> a + x) > 0),
@@ -190,7 +223,6 @@ object RetrievalQueries extends QueryPack {
           FROM sims)
        SELECT query_id, neighbor_id, CAST(rnk AS INTEGER) AS rnk, sim
        FROM ranked WHERE rnk <= 10 ORDER BY query_id, rnk"""
-  }
 
   /** One persisted token-embedding table per (session, dataset) — a
     * `SessionStore.dir` fill for t38's serving face.
@@ -812,21 +844,7 @@ object RetrievalQueries extends QueryPack {
                FROM hsims),
              densec AS (SELECT query_id, doc_id, rnk FROM hrank
                WHERE rnk <= $HybK),
-             fus AS (SELECT query_id, doc_id,
-                 1000000000000 // (60 + rnk) AS contrib FROM lexc
-               UNION ALL
-               SELECT query_id, doc_id, 1000000000000 // (60 + rnk)
-               FROM densec),
-             ff AS (SELECT query_id, doc_id,
-               CAST(sum(contrib) AS BIGINT) AS rrf_e12,
-               count(*) AS n_lists FROM fus GROUP BY 1, 2),
-             ffr AS (SELECT query_id, doc_id, rrf_e12, n_lists,
-               row_number() OVER (PARTITION BY query_id
-                 ORDER BY rrf_e12 DESC, doc_id) AS rnk
-               FROM ff)
-           SELECT query_id, CAST(rnk AS INTEGER) AS rnk, doc_id, rrf_e12,
-             CAST(n_lists AS BIGINT) AS n_lists
-           FROM ffr WHERE rnk <= $HybK ORDER BY query_id, rnk"""
+             ${fusionSql("lexc", Nil)}"""
       }),
 
     // The FULLY-SERVED hybrid stack — b11's combiner with every stage
@@ -873,29 +891,23 @@ object RetrievalQueries extends QueryPack {
       Some {
         val qVals = Queries
           .map { case (qid, text) => s"($qid, '$text')" }.mkString(", ")
-        def wSql(dd: Int) =
-          s"((CAST(('0x' || substr(md5('te:$dd:' || CAST(id AS VARCHAR)), 1, 8)) AS BIGINT) % 2001) - 1000)"
-        val dimSums = (0 until 16).map(dd =>
-          s"CAST(sum(${wSql(dd)}) AS BIGINT) AS s$dd").mkString(", ")
-        val dimVec = (0 until 16).map(dd =>
-          s"CAST((s$dd * 1000) // n AS DOUBLE)").mkString(", ")
         s"""${graft.operators.BpeTrainer.docTokenIdCtes(
             TextQueries.BpePat, TextQueries.BpeK)},
              $ScoreCtes,
              lexc AS (SELECT query_id, doc_id, rnk FROM r WHERE rnk <= $HybK),
              tw AS (SELECT doc_id, v.id AS id FROM dtok JOIN vfull v USING (tok)),
-             em AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n, $dimSums
+             em AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n, $TokDimSums
                FROM tw GROUP BY doc_id),
-             tvec AS (SELECT doc_id, [$dimVec] AS v FROM em),
+             tvec AS (SELECT doc_id, [$TokDimVec] AS v FROM em),
              cnz AS (SELECT doc_id AS neighbor_id, v AS ne FROM tvec
                WHERE list_reduce(list_transform(v, x -> x * x), (a, x) -> a + x) > 0),
              ${graft.operators.BpeTrainer.queryTokenCtes(
                TextQueries.BpePat, TextQueries.BpeK, qVals)},
              qtw AS (SELECT query_id, v.id AS id
                FROM qdtok JOIN vfull v USING (tok)),
-             qem AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n, $dimSums
+             qem AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n, $TokDimSums
                FROM qtw GROUP BY query_id),
-             qvec AS (SELECT query_id, [$dimVec] AS qe FROM qem),
+             qvec AS (SELECT query_id, [$TokDimVec] AS qe FROM qem),
              qnz AS (SELECT query_id, qe FROM qvec
                WHERE list_reduce(list_transform(qe, x -> x * x), (a, x) -> a + x) > 0),
              dsims AS (SELECT query_id, neighbor_id,
@@ -907,21 +919,7 @@ object RetrievalQueries extends QueryPack {
                FROM dsims),
              densec AS (SELECT query_id, doc_id, rnk FROM drank
                WHERE rnk <= $HybK),
-             fus AS (SELECT query_id, doc_id,
-                 1000000000000 // (60 + rnk) AS contrib FROM lexc
-               UNION ALL
-               SELECT query_id, doc_id, 1000000000000 // (60 + rnk)
-               FROM densec),
-             ff AS (SELECT query_id, doc_id,
-               CAST(sum(contrib) AS BIGINT) AS rrf_e12,
-               count(*) AS n_lists FROM fus GROUP BY 1, 2),
-             ffr AS (SELECT query_id, doc_id, rrf_e12, n_lists,
-               row_number() OVER (PARTITION BY query_id
-                 ORDER BY rrf_e12 DESC, doc_id) AS rnk
-               FROM ff)
-           SELECT query_id, CAST(rnk AS INTEGER) AS rnk, doc_id, rrf_e12,
-             CAST(n_lists AS BIGINT) AS n_lists
-           FROM ffr WHERE rnk <= $HybK ORDER BY query_id, rnk"""
+             ${fusionSql("lexc", Nil)}"""
       }),
 
     // b12 WITH THE DENSE SCAN REPLACED BY THE ANN TIER — the 100 TB
@@ -974,29 +972,23 @@ object RetrievalQueries extends QueryPack {
       Some {
         val qVals = Queries
           .map { case (qid, text) => s"($qid, '$text')" }.mkString(", ")
-        def wSql(dd: Int) =
-          s"((CAST(('0x' || substr(md5('te:$dd:' || CAST(id AS VARCHAR)), 1, 8)) AS BIGINT) % 2001) - 1000)"
-        val dimSums = (0 until 16).map(dd =>
-          s"CAST(sum(${wSql(dd)}) AS BIGINT) AS s$dd").mkString(", ")
-        val dimVec = (0 until 16).map(dd =>
-          s"CAST((s$dd * 1000) // n AS DOUBLE)").mkString(", ")
         s"""${graft.operators.BpeTrainer.docTokenIdCtes(
             TextQueries.BpePat, TextQueries.BpeK)},
              $ScoreCtes,
              lexc AS (SELECT query_id, doc_id, rnk FROM r WHERE rnk <= $HybK),
              tw AS (SELECT doc_id, v.id AS id FROM dtok JOIN vfull v USING (tok)),
-             em AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n, $dimSums
+             em AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n, $TokDimSums
                FROM tw GROUP BY doc_id),
-             tvec AS (SELECT doc_id, [$dimVec] AS v FROM em),
+             tvec AS (SELECT doc_id, [$TokDimVec] AS v FROM em),
              tvnz AS (SELECT doc_id, v FROM tvec
                WHERE list_reduce(list_transform(v, x -> x * x), (a, x) -> a + x) > 0),
              ${graft.operators.BpeTrainer.queryTokenCtes(
                TextQueries.BpePat, TextQueries.BpeK, qVals)},
              qtw AS (SELECT query_id, v.id AS id
                FROM qdtok JOIN vfull v USING (tok)),
-             qem AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n, $dimSums
+             qem AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n, $TokDimSums
                FROM qtw GROUP BY query_id),
-             qvec AS (SELECT query_id, [$dimVec] AS qe FROM qem),
+             qvec AS (SELECT query_id, [$TokDimVec] AS qe FROM qem),
              qnz AS (SELECT query_id, qe FROM qvec
                WHERE list_reduce(list_transform(qe, x -> x * x), (a, x) -> a + x) > 0),
              qq AS (SELECT query_id,
@@ -1018,21 +1010,7 @@ object RetrievalQueries extends QueryPack {
                  TokSampleMax, TokNprobeLadder, HybK, TokKCandLadder))},
              densec AS (SELECT query_id, neighbor_id AS doc_id, rnk
                FROM rr WHERE rnk <= $HybK),
-             fus AS (SELECT query_id, doc_id,
-                 1000000000000 // (60 + rnk) AS contrib FROM lexc
-               UNION ALL
-               SELECT query_id, doc_id, 1000000000000 // (60 + rnk)
-               FROM densec),
-             ff AS (SELECT query_id, doc_id,
-               CAST(sum(contrib) AS BIGINT) AS rrf_e12,
-               count(*) AS n_lists FROM fus GROUP BY 1, 2),
-             ffr AS (SELECT query_id, doc_id, rrf_e12, n_lists,
-               row_number() OVER (PARTITION BY query_id
-                 ORDER BY rrf_e12 DESC, doc_id) AS rnk
-               FROM ff)
-           SELECT query_id, CAST(rnk AS INTEGER) AS rnk, doc_id, rrf_e12,
-             CAST(n_lists AS BIGINT) AS n_lists
-           FROM ffr WHERE rnk <= $HybK ORDER BY query_id, rnk"""
+             ${fusionSql("lexc", Nil)}"""
       }),
 
     // METADATA-FILTERED hybrid serving (VERDICT r18 #3) — the
@@ -1043,8 +1021,8 @@ object RetrievalQueries extends QueryPack {
     // PRE-filter semantics — the lexical leg semi-joins the allowed
     // ids into the pruned postings BEFORE df/scoring/ranking and
     // aggregates scoped N/avgdl from the index's docs store
-    // (Bm25.servedTopKScoped — bit-identical to an index built on the
-    // slice alone), the dense leg semi-joins the allowed ids into the
+    // (Bm25.servedTopK under a Bm25.grant — bit-identical to an index
+    // built on the slice alone), the dense leg semi-joins the allowed ids into the
     // codes BEFORE the LUT join, so no distance is ever priced for a
     // row the grant rejects (n21/n22's discipline at the hybrid tier;
     // FilteredSearchSpec's planted case shows why post-filtering a
@@ -1062,14 +1040,13 @@ object RetrievalQueries extends QueryPack {
           .filter(col("source").isin(ScopeSources: _*))
           .select("doc_id")
         // the grant is frozen for this consumer, so its scoped N/avgdl
-        // are priced once per session and served through the operator's
-        // own hoisted face (servedTopKScopedWith's scaladoc; r21 —
-        // every execution used to re-run the full docs-store pass)
+        // are priced once per session (ServingCache.bm25ScopedStats; r21
+        // — every execution used to re-run the full docs-store pass)
         val bmDir = servedBm25Dir(s, d)
-        val scopedSt = ServingCache.bm25ScopedStats(s, "b14_scope", d,
-          () => Bm25.scopedStats(s, bmDir, allowed))
-        val lex = Bm25.servedTopKScopedWith(s, bmDir,
-            Queries.toDF("query_id", "q_text"), HybK, allowed, scopedSt)
+        val grant = ServingCache.bm25ScopedStats(s, "b14_scope", d,
+          Bm25.grant(s, bmDir, allowed))
+        val lex = Bm25.servedTopK(s, bmDir,
+            Queries.toDF("query_id", "q_text"), HybK, Some(grant))
           .select("query_id", "doc_id", "rnk")
         val idxDir = servedTokenIvfPqDir(s, d)
         val (cents, books) = ServingCache.ivfPqModel(s, idxDir)
@@ -1092,12 +1069,6 @@ object RetrievalQueries extends QueryPack {
       Some {
         val qVals = Queries
           .map { case (qid, text) => s"($qid, '$text')" }.mkString(", ")
-        def wSql(dd: Int) =
-          s"((CAST(('0x' || substr(md5('te:$dd:' || CAST(id AS VARCHAR)), 1, 8)) AS BIGINT) % 2001) - 1000)"
-        val dimSums = (0 until 16).map(dd =>
-          s"CAST(sum(${wSql(dd)}) AS BIGINT) AS s$dd").mkString(", ")
-        val dimVec = (0 until 16).map(dd =>
-          s"CAST((s$dd * 1000) // n AS DOUBLE)").mkString(", ")
         val srcs = ScopeSources.map(x => s"'$x'").mkString(", ")
         s"""${graft.operators.BpeTrainer.docTokenIdCtes(
             TextQueries.BpePat, TextQueries.BpeK)},
@@ -1105,18 +1076,18 @@ object RetrievalQueries extends QueryPack {
              ${scoreCtes("fdocs")},
              lexc AS (SELECT query_id, doc_id, rnk FROM r WHERE rnk <= $HybK),
              tw AS (SELECT doc_id, v.id AS id FROM dtok JOIN vfull v USING (tok)),
-             em AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n, $dimSums
+             em AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n, $TokDimSums
                FROM tw GROUP BY doc_id),
-             tvec AS (SELECT doc_id, [$dimVec] AS v FROM em),
+             tvec AS (SELECT doc_id, [$TokDimVec] AS v FROM em),
              tvnz AS (SELECT doc_id, v FROM tvec
                WHERE list_reduce(list_transform(v, x -> x * x), (a, x) -> a + x) > 0),
              ${graft.operators.BpeTrainer.queryTokenCtes(
                TextQueries.BpePat, TextQueries.BpeK, qVals)},
              qtw AS (SELECT query_id, v.id AS id
                FROM qdtok JOIN vfull v USING (tok)),
-             qem AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n, $dimSums
+             qem AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n, $TokDimSums
                FROM qtw GROUP BY query_id),
-             qvec AS (SELECT query_id, [$dimVec] AS qe FROM qem),
+             qvec AS (SELECT query_id, [$TokDimVec] AS qe FROM qem),
              qnz AS (SELECT query_id, qe FROM qvec
                WHERE list_reduce(list_transform(qe, x -> x * x), (a, x) -> a + x) > 0),
              qq AS (SELECT query_id,
@@ -1139,21 +1110,7 @@ object RetrievalQueries extends QueryPack {
                  TokSampleMax, TokNprobeLadder, HybK, TokKCandLadder))},
              densec AS (SELECT query_id, neighbor_id AS doc_id, rnk
                FROM rr WHERE rnk <= $HybK),
-             fus AS (SELECT query_id, doc_id,
-                 1000000000000 // (60 + rnk) AS contrib FROM lexc
-               UNION ALL
-               SELECT query_id, doc_id, 1000000000000 // (60 + rnk)
-               FROM densec),
-             ff AS (SELECT query_id, doc_id,
-               CAST(sum(contrib) AS BIGINT) AS rrf_e12,
-               count(*) AS n_lists FROM fus GROUP BY 1, 2),
-             ffr AS (SELECT query_id, doc_id, rrf_e12, n_lists,
-               row_number() OVER (PARTITION BY query_id
-                 ORDER BY rrf_e12 DESC, doc_id) AS rnk
-               FROM ff)
-           SELECT query_id, CAST(rnk AS INTEGER) AS rnk, doc_id, rrf_e12,
-             CAST(n_lists AS BIGINT) AS n_lists
-           FROM ffr WHERE rnk <= $HybK ORDER BY query_id, rnk"""
+             ${fusionSql("lexc", Nil)}"""
       }),
 
     // PER-ACCOUNT multi-grant hybrid serving (VERDICT r19 #4) — the
@@ -1188,13 +1145,12 @@ object RetrievalQueries extends QueryPack {
           .flatMap(a => Queries.map { case (qid, t) => (a, qid, t) })
           .toDF("account", "query_id", "q_text")
         // frozen grants table → per-account N/avgdl priced once per
-        // session (perGrantStats' scaladoc hoist; r21 — the inline face
+        // session (ServingCache.bm25ScopedStats; r21 — the inline face
         // re-scanned the docs store per execution)
         val bmDir = servedBm25Dir(s, d)
-        val grantSt = ServingCache.bm25ScopedStats(s, "b15_grants", d,
-          () => Bm25.perGrantStats(s, bmDir, grantPairs))
-        val lex = Bm25.servedTopKPerGrantWith(s, bmDir, aq,
-            HybK, grantPairs, grantSt)
+        val grant = ServingCache.bm25ScopedStats(s, "b15_grants", d,
+          Bm25.grant(s, bmDir, grantPairs))
+        val lex = Bm25.servedTopK(s, bmDir, aq, HybK, Some(grant))
           .select("account", "query_id", "doc_id", "rnk")
         val idxDir = servedTokenIvfPqDir(s, d)
         val (cents, books) = ServingCache.ivfPqModel(s, idxDir)
@@ -1229,12 +1185,6 @@ object RetrievalQueries extends QueryPack {
           .map { case (a, src) => s"('$a', '$src')" }.mkString(", ")
         val accVals = GrantRows.map(_._1).distinct.zipWithIndex
           .map { case (a, i) => s"($i, '$a')" }.mkString(", ")
-        def wSql(dd: Int) =
-          s"((CAST(('0x' || substr(md5('te:$dd:' || CAST(id AS VARCHAR)), 1, 8)) AS BIGINT) % 2001) - 1000)"
-        val dimSums = (0 until 16).map(dd =>
-          s"CAST(sum(${wSql(dd)}) AS BIGINT) AS s$dd").mkString(", ")
-        val dimVec = (0 until 16).map(dd =>
-          s"CAST((s$dd * 1000) // n AS DOUBLE)").mkString(", ")
         s"""${graft.operators.BpeTrainer.docTokenIdCtes(
             TextQueries.BpePat, TextQueries.BpeK)},
              ${oracleProlog("documents")},
@@ -1271,18 +1221,18 @@ object RetrievalQueries extends QueryPack {
                    ORDER BY score_e15 DESC, doc_id) AS rnk FROM mgsc)
                WHERE rnk <= $HybK),
              tw AS (SELECT doc_id, v.id AS id FROM dtok JOIN vfull v USING (tok)),
-             em AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n, $dimSums
+             em AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n, $TokDimSums
                FROM tw GROUP BY doc_id),
-             tvec AS (SELECT doc_id, [$dimVec] AS v FROM em),
+             tvec AS (SELECT doc_id, [$TokDimVec] AS v FROM em),
              tvnz AS (SELECT doc_id, v FROM tvec
                WHERE list_reduce(list_transform(v, x -> x * x), (a, x) -> a + x) > 0),
              ${graft.operators.BpeTrainer.queryTokenCtes(
                TextQueries.BpePat, TextQueries.BpeK, qVals)},
              qtw AS (SELECT query_id, v.id AS id
                FROM qdtok JOIN vfull v USING (tok)),
-             qem AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n, $dimSums
+             qem AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n, $TokDimSums
                FROM qtw GROUP BY query_id),
-             qvec AS (SELECT query_id, [$dimVec] AS qe FROM qem),
+             qvec AS (SELECT query_id, [$TokDimVec] AS qe FROM qem),
              qnz AS (SELECT query_id, qe FROM qvec
                WHERE list_reduce(list_transform(qe, x -> x * x), (a, x) -> a + x) > 0),
              accv AS (SELECT ai, account
@@ -1314,21 +1264,7 @@ object RetrievalQueries extends QueryPack {
                  rr.neighbor_id AS doc_id, rr.rnk
                FROM rr JOIN xqacct xa ON xa.query_id = rr.query_id
                WHERE rr.rnk <= $HybK),
-             fus AS (SELECT account, query_id, doc_id,
-                 1000000000000 // (60 + rnk) AS contrib FROM mglex
-               UNION ALL
-               SELECT account, query_id, doc_id, 1000000000000 // (60 + rnk)
-               FROM densec),
-             ff AS (SELECT account, query_id, doc_id,
-               CAST(sum(contrib) AS BIGINT) AS rrf_e12,
-               count(*) AS n_lists FROM fus GROUP BY 1, 2, 3),
-             ffr AS (SELECT account, query_id, doc_id, rrf_e12, n_lists,
-               row_number() OVER (PARTITION BY account, query_id
-                 ORDER BY rrf_e12 DESC, doc_id) AS rnk
-               FROM ff)
-           SELECT account, query_id, CAST(rnk AS INTEGER) AS rnk, doc_id,
-             rrf_e12, CAST(n_lists AS BIGINT) AS n_lists
-           FROM ffr WHERE rnk <= $HybK ORDER BY account, query_id, rnk"""
+             ${fusionSql("mglex", Seq("account"))}"""
       }),
 
     // Semantic dedup, the SemDeDup shape (Abbas et al. 2023) over the

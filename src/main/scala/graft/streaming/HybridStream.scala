@@ -5,8 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.BatchSink
-import graft.operators.{Bm25, HashedEmbedding, IvfPq, RankFusion,
-  TokenEmbeddingTable}
+import graft.operators.{Bm25, IvfPq, RankFusion, TokenEmbeddingTable}
 
 /** STREAMING hybrid retrieval — the fused face VERDICT r17 #2 asked
   * for: `RetrievalStream` serves the lexical leg and `PqStream` the
@@ -29,8 +28,8 @@ import graft.operators.{Bm25, HashedEmbedding, IvfPq, RankFusion,
   * Crash replay is idempotent: fused results land through
   * `BatchSink.writeBatch` — a replayed batch overwrites its own
   * `_batch_id` partition, never duplicates it. At-least-once sources
-  * may duplicate a query WITHIN a batch; `dropDuplicates("query_id")`
-  * restores set semantics before either leg prices anything (a
+  * may duplicate a query WITHIN a batch; dropping duplicates per
+  * query restores set semantics before either leg prices anything (a
   * duplicated query row would double every RRF contribution).
   *
   * Per-batch scale shape: the lexical read is pruned to the batch's
@@ -39,139 +38,69 @@ import graft.operators.{Bm25, HashedEmbedding, IvfPq, RankFusion,
   * flat in batch size. The query VECTORS never collect to the driver
   * (the `searchRerankDf` contract); the one driver-side collect per
   * batch is the batch's DISTINCT term-bucket codes inside
-  * `Bm25.servedTopKDf` — bounded by the index's nBuckets, not by the
+  * `Bm25.servedTopK` — bounded by the index's nBuckets, not by the
   * batch (ADVICE r18 scoped this claim).
-  * HybridStreamSpec pins chopped ≡ single-batch ≡ the batch b13 entry.
+  *
+  * Governed serving (b14/b15's stream face): with `grantPairs` — the
+  * scope key columns plus `doc_id`, as `Bm25.grant` takes them — every
+  * query answers under its grant with pre-filter semantics on BOTH
+  * legs: the lexical leg through `Bm25.servedTopK` under the grant
+  * (scoped postings, df and N/avgdl), the dense leg by joining the
+  * pairs into the codes BEFORE the scope-keyed LUT join
+  * (`searchRerankDf(scopeCols)`), and the fusion per (keys…, query).
+  * With no key column that is one consumer's allowed set; with
+  * `account` the stream carries (account, query_id, q_text) rows and
+  * each answers under its own account's grant, all accounts in one
+  * per-batch plan. In-batch duplicates collapse per (keys…, query_id)
+  * — the same query under two accounts is two legitimate queries.
+  * The grant is the definition-time snapshot (the `SecureShare` grant
+  * lifecycle — a revocation is a stream redefinition): the pairs
+  * materialize once and `Bm25.grant` prices their N/avgdl once, so a
+  * trigger never re-scans the grant's backing table OR the index's
+  * docs store.
+  *
+  * HybridStreamSpec pins chopped ≡ single-batch ≡ the batch b13 entry
+  * unscoped, ≡ b14 and b15 under their grants, and that no batch plan
+  * scans the docs store.
   */
 object HybridStream {
 
   def serve(queries: DataFrame, bm25Dir: String, tableDir: String,
       annDir: String, merges: Seq[(String, String)], bpePat: String,
       outDir: String, checkpointDir: String, k: Int, nprobe: Int,
-      kCand: Int, dims: Int): DataStreamWriter[Row] =
-    serveWith(queries, bm25Dir, tableDir, annDir, merges, bpePat,
-      outDir, checkpointDir, k, nprobe, kCand, dims, allowed = None)
-
-  /** The CONSUMER-SCOPED stream (VERDICT r18 #3 — b14's serving face):
-    * every batch answers under the grant's allowed doc set, with
-    * pre-filter semantics on BOTH legs — the lexical leg through
-    * `Bm25.servedTopKScopedWith` (scoped postings, scoped df, scoped
-    * N/avgdl), the dense leg by semi-joining the allowed ids into the
-    * codes BEFORE the LUT join. The grant SNAPSHOT is the definition-
-    * time contract, now taken literally (VERDICT r19 #3): the allowed
-    * id set is materialized once at stream definition (the
-    * `SecureShare` grant lifecycle — a revocation is a stream
-    * redefinition over the new grant), and the grant's corpus
-    * statistics are priced once from it, so a trigger never re-scans
-    * the grant's backing table OR the index's docs store — per-batch
-    * corpus work stays the pruned term buckets + probed cells, with no
-    * linear-in-corpus read hiding in the stats (the previous face paid
-    * a full docs-store pass per micro-batch for a frozen grant).
-    * HybridStreamSpec pins scoped-stream ≡ the batch b14 entry and
-    * asserts the batch plans are docs-store-free.
-    */
-  def serveScoped(queries: DataFrame, bm25Dir: String, tableDir: String,
-      annDir: String, merges: Seq[(String, String)], bpePat: String,
-      outDir: String, checkpointDir: String, k: Int, nprobe: Int,
-      kCand: Int, dims: Int, allowed: DataFrame): DataStreamWriter[Row] =
-    serveWith(queries, bm25Dir, tableDir, annDir, merges, bpePat,
-      outDir, checkpointDir, k, nprobe, kCand, dims, Some(allowed))
-
-  /** The MULTI-CONSUMER stream (the b15 serving face): a
-    * (account, query_id, q_text) stream where every query answers
-    * under ITS OWN account's grant, all accounts in one per-batch plan
-    * — per-account BM25 through `Bm25.servedTopKPerGrantWith`,
-    * grant-tagged dense candidates under the scope-keyed LUT join
-    * (`searchRerankDf(scopeCols)`), fusion per (account, query). The
-    * grants TABLE is the definition-time snapshot (the `serveScoped`
-    * contract, fleet-widened): the (account, doc_id) pairs materialize
-    * once, the per-account corpus stats price once from them
-    * (`Bm25.perGrantStats` — one row per account, reused every
-    * trigger), and the codes tag once — adding or revoking an
-    * account's grant is a stream redefinition. Idempotence and batch
-    * shape are `serve`'s; in-batch duplicates collapse per
-    * (account, query_id) — the same query text under two accounts is
-    * two legitimate queries with different answers.
-    */
-  def servePerGrant(aqueries: DataFrame, bm25Dir: String,
-      tableDir: String, annDir: String, merges: Seq[(String, String)],
-      bpePat: String, outDir: String, checkpointDir: String, k: Int,
-      nprobe: Int, kCand: Int, dims: Int,
-      grantPairs: DataFrame): DataStreamWriter[Row] = {
-    val spark = aqueries.sparkSession
-    val table = TokenEmbeddingTable.load(spark, tableDir)
-    val (cents, books) = IvfPq.loadModel(spark, annDir)
-    // definition-time fleet snapshot: pairs, per-account stats, and
-    // the grant-tagged codes all price once
-    val pairs = grantPairs.select("account", "doc_id").localCheckpoint()
-    val statsA = Bm25.perGrantStats(spark, bm25Dir, pairs)
-      .localCheckpoint()
-    val codesG = spark.read.parquet(s"$annDir/codes")
-      .join(pairs.select(col("account"), col("doc_id").as("vec_id")),
-        Seq("vec_id"))
-    val vectors = spark.read.parquet(s"$annDir/vectors")
-    BatchSink.stream(aqueries, checkpointDir) { (batch, batchId) =>
-      val b = batch.dropDuplicates("account", "query_id")
-        .localCheckpoint()
-      val lex = Bm25.servedTopKPerGrantWith(spark, bm25Dir, b, k,
-          pairs, statsA)
-        .select("account", "query_id", "doc_id", "rnk")
-      val qvecs = b.select("account", "query_id")
-        .join(TokenEmbeddingTable.queryVecs(
-          b.select(col("query_id").as("doc_id"),
-              col("q_text").as("text"))
-            .dropDuplicates("doc_id"),
-          merges, bpePat, table), Seq("query_id"))
-      val dense = IvfPq.searchRerankDf(codesG, vectors, qvecs, cents,
-          books, nprobe, kCand, k, dims, excludeSelf = false,
-          scopeCols = Seq("account"))
-        .select(col("account"), col("query_id"),
-          col("neighbor_id").as("doc_id"), col("rnk"))
-      BatchSink.writeBatch(RankFusion.rrf(Seq(lex, dense), k,
-          keyCols = Seq("account", "query_id")),
-        outDir, batchId)
-    }
-  }
-
-  private def serveWith(queries: DataFrame, bm25Dir: String,
-      tableDir: String, annDir: String, merges: Seq[(String, String)],
-      bpePat: String, outDir: String, checkpointDir: String, k: Int,
-      nprobe: Int, kCand: Int, dims: Int,
-      allowed: Option[DataFrame]): DataStreamWriter[Row] = {
+      kCand: Int, dims: Int,
+      grantPairs: Option[DataFrame] = None): DataStreamWriter[Row] = {
     val spark = queries.sparkSession
     val table = TokenEmbeddingTable.load(spark, tableDir)
     val (cents, books) = IvfPq.loadModel(spark, annDir)
+    val grant = grantPairs.map(p =>
+      Bm25.grant(spark, bm25Dir, p.distinct().localCheckpoint()))
+    val keys = grant.fold(Seq.empty[String])(_.keys)
+    val qKeys = keys :+ "query_id"
     val codesAll = spark.read.parquet(s"$annDir/codes")
-    // definition-time grant snapshot (VERDICT r19 #3): the allowed id
-    // set materializes ONCE, and the grant's scoped N/avgdl are priced
-    // once from it — a one-row frame every batch reuses; without this
-    // each trigger paid a full docs-store pass for a frozen grant
-    val frozenGrant = allowed.map(a =>
-      a.select("doc_id").localCheckpoint())
-    val grantStats = frozenGrant.map(a =>
-      Bm25.scopedStats(spark, bm25Dir, a).localCheckpoint())
-    val codes = frozenGrant match {
-      case Some(a) => codesAll.join(
-        a.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")
-      case None => codesAll
-    }
+    val codes = grant.fold(codesAll)(g =>
+      codesAll.join(g.pairs.withColumnRenamed("doc_id", "vec_id"),
+        Seq("vec_id")))
     val vectors = spark.read.parquet(s"$annDir/vectors")
     BatchSink.stream(queries, checkpointDir) { (batch, batchId) =>
-      val b = batch.dropDuplicates("query_id").localCheckpoint()
-      val lex = (frozenGrant match {
-        case Some(a) => Bm25.servedTopKScopedWith(spark, bm25Dir, b, k,
-          a, grantStats.get)
-        case None => Bm25.servedTopKDf(spark, bm25Dir, b, k)
-      }).select("query_id", "doc_id", "rnk")
-      val qvecs = TokenEmbeddingTable.queryVecs(
-        b.select(col("query_id").as("doc_id"),
-          col("q_text").as("text")),
-        merges, bpePat, table)
+      val b = batch.dropDuplicates(qKeys).localCheckpoint()
+      val lex = Bm25.servedTopK(spark, bm25Dir, b, k, grant)
+        .select((qKeys ++ Seq("doc_id", "rnk")).map(col): _*)
+      val texts = b.select(col("query_id").as("doc_id"),
+        col("q_text").as("text"))
+      // a keyed batch repeats a query's text once per key: embed each
+      // text once and fan the vector out to its keys
+      val qvecs =
+        if (keys.isEmpty) TokenEmbeddingTable.queryVecs(texts, merges, bpePat, table)
+        else b.select(qKeys.map(col): _*).join(TokenEmbeddingTable.queryVecs(
+          texts.dropDuplicates("doc_id"), merges, bpePat, table), Seq("query_id"))
       val dense = IvfPq.searchRerankDf(codes, vectors, qvecs, cents,
-          books, nprobe, kCand, k, dims, excludeSelf = false)
-        .select(col("query_id"), col("neighbor_id").as("doc_id"),
-          col("rnk"))
-      BatchSink.writeBatch(RankFusion.rrf(Seq(lex, dense), k), outDir, batchId)
+          books, nprobe, kCand, k, dims, excludeSelf = false,
+          scopeCols = keys)
+        .select(qKeys.map(col) ++ Seq(col("neighbor_id").as("doc_id"),
+          col("rnk")): _*)
+      BatchSink.writeBatch(RankFusion.rrf(Seq(lex, dense), k, keyCols = qKeys),
+        outDir, batchId)
     }
   }
 }

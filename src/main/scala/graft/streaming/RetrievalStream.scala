@@ -13,7 +13,7 @@ import graft.operators.Bm25
   * index via the DataFrame-native served path, results land
   * append-only.
   *
-  * Per batch the work is exactly `Bm25.servedTopKDf`: the read is
+  * Per batch the work is exactly `Bm25.servedTopK`: the read is
   * pruned to the batch's term-bucket partitions (driver-side bucket
   * resolution bounded by the batch's vocabulary — the DocStream
   * `touched` precedent), df is computed exactly from the pruned rows,
@@ -41,7 +41,7 @@ object RetrievalStream {
       // set semantics per query_id (an at-least-once source can
       // deliver a query twice in one batch; a duplicated row would
       // double every term contribution) — the AnnStream contract
-      BatchSink.writeBatch(Bm25.servedTopKDf(batch.sparkSession, indexDir,
+      BatchSink.writeBatch(Bm25.servedTopK(batch.sparkSession, indexDir,
           batch.dropDuplicates("query_id"), k),
         outDir, batchId)
     }

@@ -79,6 +79,17 @@ class ArtifactsSpec extends AnyFunSuite {
     assert(seqs(log) === Seq((1L, "a")))
   }
 
+  test("a crashed append's committed task output is not published by the next append") {
+    val log = newDir()
+    Artifacts.appendToLog(Seq("a").toDF("v"), log)
+    // a job that died after committing a task but before committing
+    // itself: the v1 committer's committed-task dir under _temporary/0
+    Seq((9L, "orphan")).toDF("seq", "v").write
+      .parquet(s"$log/_temporary/0/task_202601010000_0001_m_000000")
+    Artifacts.appendToLog(Seq("b").toDF("v"), log)
+    assert(seqs(log) === Seq((1L, "a"), (2L, "b")))
+  }
+
   test("a log holding only a zero-row file appends from seq 1") {
     val log = newDir()
     Seq.empty[(Long, String)].toDF("seq", "v").write.parquet(log)

@@ -147,10 +147,10 @@ class HybridServeSpec extends AnyFunSuite {
     val allowed = slice.select("doc_id")
     // the shared-index scoped serve is BIT-IDENTICAL to ad-hoc BM25
     // over the slice alone — scoped df, scoped N/avgdl, scoped ranking
-    val served = Bm25.servedTopKScoped(spark,
-        RetrievalQueries.servedBm25Dir(spark, d),
+    val bmDir = RetrievalQueries.servedBm25Dir(spark, d)
+    val served = Bm25.servedTopK(spark, bmDir,
         RetrievalQueries.Queries.toDF("query_id", "q_text"),
-        RetrievalQueries.HybK, allowed)
+        RetrievalQueries.HybK, Some(Bm25.grant(spark, bmDir, allowed)))
       .orderBy("query_id", "rnk").collect().map(_.toString).toSeq
     val adHoc = Bm25.topK(slice, "doc_id", "text",
         RetrievalQueries.Queries, RetrievalQueries.HybK)

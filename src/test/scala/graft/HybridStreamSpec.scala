@@ -53,16 +53,12 @@ class HybridStreamSpec extends AnyFunSuite {
     val annDir = RetrievalQueries.servedTokenIvfPqDir(spark, sf)
     val merges = TextQueries.frozenByteMerges(spark, sf)
     val knobs = graft.operators.IvfPq.loadKnobs(spark, annDir).get
-    val q = (allowed match {
-      case Some(a) => HybridStream.serveScoped(src, bm25Dir, tableDir,
-        annDir, merges, TextQueries.BpePat, s"$base/out", s"$base/ck",
-        k = RetrievalQueries.HybK, nprobe = knobs.nprobe,
-        kCand = knobs.kCand, dims = RetrievalQueries.TokDims, allowed = a)
-      case None => HybridStream.serve(src, bm25Dir, tableDir, annDir,
+    val q = HybridStream.serve(src, bm25Dir, tableDir, annDir,
         merges, TextQueries.BpePat, s"$base/out", s"$base/ck",
         k = RetrievalQueries.HybK, nprobe = knobs.nprobe,
-        kCand = knobs.kCand, dims = RetrievalQueries.TokDims)
-    }).trigger(Trigger.AvailableNow()).start()
+        kCand = knobs.kCand, dims = RetrievalQueries.TokDims,
+        grantPairs = allowed)
+      .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     (base, results(spark.read.parquet(s"$base/out")))
   }
@@ -101,39 +97,24 @@ class HybridStreamSpec extends AnyFunSuite {
       "a doc outside the grant leaked into the scoped results")
   }
 
+  private val aSchema = StructType(Seq(StructField("account", StringType),
+    StructField("query_id", LongType), StructField("q_text", StringType)))
+
+  private def grantPairs = Tables.load(spark, sf, "documents")
+    .join(RetrievalQueries.GrantRows.toDF("account", "source"),
+      Seq("source"))
+    .select("account", "doc_id")
+
+  private val aRows = RetrievalQueries.GrantRows.map(_._1).distinct
+    .flatMap(a => queries.map { case (qid, t) => (a, qid, t) })
+
   test("scoped stream prices the grant's stats ONCE at definition: no batch plan ever scans the docs store (VERDICT r19 #3)") {
+    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    val expected = results(
-      SparkEntry.queries("b14_hybrid_filtered")(spark, sf))
-    val allowed = Tables.load(spark, sf, "documents")
-      .filter(col("source").isin(RetrievalQueries.ScopeSources: _*))
-      .select("doc_id")
-    val srcDir = Files.createTempDirectory("graft_hyb_stat_src").toString
-    val base = Files.createTempDirectory("graft_hyb_stat").toString
-    Seq(queries.take(1), queries.drop(1)).zipWithIndex.foreach { case (rows, i) =>
-      rows.toDF("query_id", "q_text").coalesce(1)
-        .write.mode("overwrite").parquet(s"$srcDir/f$i")
-      new java.io.File(s"$srcDir/f$i").listFiles()
-        .foreach(f => f.setLastModified(1700000000000L + i * 60000L))
-    }
-    val src = spark.readStream.schema(qSchema)
-      .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
-      .parquet(s"$srcDir/*")
     val bm25Dir = RetrievalQueries.servedBm25Dir(spark, sf)
     val knobs = graft.operators.IvfPq.loadKnobs(
       spark, RetrievalQueries.servedTokenIvfPqDir(spark, sf)).get
-    // stream DEFINITION (grant snapshot + scoped stats priced here) …
-    val writer = HybridStream.serveScoped(src, bm25Dir,
-      RetrievalQueries.servedTokenEmbDir(spark, sf),
-      RetrievalQueries.servedTokenIvfPqDir(spark, sf),
-      TextQueries.frozenByteMerges(spark, sf), TextQueries.BpePat,
-      s"$base/out", s"$base/ck", k = RetrievalQueries.HybK,
-      nprobe = knobs.nprobe, kCand = knobs.kCand,
-      dims = RetrievalQueries.TokDims, allowed = allowed)
-    // … then EVERY scan in every executed batch plan is recorded; the
-    // docs store must never appear (the scoped N/avgdl are a frozen
-    // one-row frame, not a per-trigger corpus pass)
     def scanPaths(p: SparkPlan): Seq[String] = (p match {
       case a: AdaptiveSparkPlanExec => scanPaths(a.executedPlan)
       case q: QueryStageExec => scanPaths(q.plan)
@@ -141,32 +122,74 @@ class HybridStreamSpec extends AnyFunSuite {
         s.relation.location.rootPaths.map(_.toString)
       case o => o.children.flatMap(scanPaths)
     }) ++ p.subqueries.flatMap(scanPaths)
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit =
-        scanPaths(qe.executedPlan).foreach(seen.add)
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
+    def rows(df: DataFrame, cols: Seq[String]): Set[String] =
+      df.select(cols.map(col): _*).collect().map(_.toString).toSet
+    def check(name: String, grant: DataFrame, files: Seq[DataFrame],
+        schema: StructType, expected: Set[String], cols: Seq[String]): Unit = {
+      assert(expected.nonEmpty, s"$name: batch reference is empty")
+      val srcDir = Files.createTempDirectory("graft_hyb_stat_src").toString
+      val base = Files.createTempDirectory("graft_hyb_stat").toString
+      files.zipWithIndex.foreach { case (f, i) =>
+        f.coalesce(1).write.mode("overwrite").parquet(s"$srcDir/f$i")
+        new java.io.File(s"$srcDir/f$i").listFiles()
+          .foreach(f => f.setLastModified(1700000000000L + i * 60000L))
+      }
+      val src = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
+        .parquet(s"$srcDir/*")
+      // stream DEFINITION (grant snapshot + its stats priced here) …
+      val writer = HybridStream.serve(src, bm25Dir,
+        RetrievalQueries.servedTokenEmbDir(spark, sf),
+        RetrievalQueries.servedTokenIvfPqDir(spark, sf),
+        TextQueries.frozenByteMerges(spark, sf), TextQueries.BpePat,
+        s"$base/out", s"$base/ck", k = RetrievalQueries.HybK,
+        nprobe = knobs.nprobe, kCand = knobs.kCand,
+        dims = RetrievalQueries.TokDims, grantPairs = Some(grant))
+      // … then EVERY scan in every executed batch plan is recorded; the
+      // docs store must never appear (the grant's N/avgdl are a frozen
+      // local frame, not a per-trigger corpus pass)
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            durationNs: Long): Unit =
+          scanPaths(qe.executedPlan).foreach(seen.add)
+        override def onFailure(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            exception: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      val got =
+        try {
+          val q = writer.trigger(Trigger.AvailableNow()).start()
+          q.awaitTermination()
+          Thread.sleep(500)
+          rows(spark.read.parquet(s"$base/out"), cols)
+        } finally spark.listenerManager.unregister(listener)
+      assert(got === expected,
+        s"$name: hoisted-stats stream diverged from its batch entry")
+      import scala.jdk.CollectionConverters._
+      val scans = seen.asScala.toSeq
+      assert(scans.nonEmpty, s"$name: listener saw no scans — window broken")
+      val docScans = scans.filter(_.contains(s"$bm25Dir/docs"))
+      assert(docScans.isEmpty,
+        s"$name: a batch plan re-scanned the docs store for frozen-grant stats: $docScans")
     }
-    spark.listenerManager.register(listener)
-    val got =
-      try {
-        val q = writer.trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        Thread.sleep(500)
-        results(spark.read.parquet(s"$base/out"))
-      } finally spark.listenerManager.unregister(listener)
-    assert(got === expected,
-      "hoisted-stats scoped stream diverged from batch b14")
-    import scala.jdk.CollectionConverters._
-    val scans = seen.asScala.toSeq
-    assert(scans.nonEmpty, "listener saw no scans — window broken")
-    val docScans = scans.filter(_.contains(s"$bm25Dir/docs"))
-    assert(docScans.isEmpty,
-      s"a batch plan re-scanned the docs store for frozen-grant stats: $docScans")
+    val cols = Seq("query_id", "rnk", "doc_id", "rrf_e12", "n_lists")
+    check("scoped",
+      Tables.load(spark, sf, "documents")
+        .filter(col("source").isin(RetrievalQueries.ScopeSources: _*))
+        .select("doc_id"),
+      Seq(queries.take(1), queries.drop(1)).map(_.toDF("query_id", "q_text")),
+      qSchema,
+      rows(SparkEntry.queries("b14_hybrid_filtered")(spark, sf), cols), cols)
+    val aCols = "account" +: cols
+    check("per-account", grantPairs,
+      Seq(aRows.take(2), aRows.drop(2))
+        .map(_.toDF("account", "query_id", "q_text")),
+      aSchema,
+      rows(SparkEntry.queries("b15_hybrid_multi_grant")(spark, sf), aCols),
+      aCols)
   }
 
   private def copyDir(from: String, to: String): Unit = {
@@ -282,14 +305,6 @@ class HybridStreamSpec extends AnyFunSuite {
       .select("account", "query_id", "rnk", "doc_id", "rrf_e12", "n_lists")
       .collect().map(_.toString).toSet
     assert(expected.nonEmpty, "batch b15 reference is empty")
-    val grantPairs = Tables.load(spark, sf, "documents")
-      .join(RetrievalQueries.GrantRows.toDF("account", "source"),
-        Seq("source"))
-      .select("account", "doc_id")
-    val aRows = RetrievalQueries.GrantRows.map(_._1).distinct
-      .flatMap(a => queries.map { case (qid, t) => (a, qid, t) })
-    val aSchema = StructType(Seq(StructField("account", StringType),
-      StructField("query_id", LongType), StructField("q_text", StringType)))
     def runPG(files: Seq[Seq[(String, Long, String)]], onePer: Boolean)
         : Set[String] = {
       val srcDir = Files.createTempDirectory("graft_hybmg_src").toString
@@ -308,8 +323,7 @@ class HybridStreamSpec extends AnyFunSuite {
       val knobs = graft.operators.IvfPq.loadKnobs(spark, annDir).get
       // record every file scan executed by the stream's batch plans:
       // the docs store must appear in NONE of them (per-account stats
-      // are a frozen definition-time frame — the serveScoped
-      // discipline, fleet-widened)
+      // are a frozen definition-time frame, as for a scoped grant)
       def scanPaths(p: SparkPlan): Seq[String] = (p match {
         case a: AdaptiveSparkPlanExec => scanPaths(a.executedPlan)
         case q: QueryStageExec => scanPaths(q.plan)
@@ -331,13 +345,13 @@ class HybridStreamSpec extends AnyFunSuite {
             qe: org.apache.spark.sql.execution.QueryExecution,
             exception: Exception): Unit = ()
       }
-      val writer = HybridStream.servePerGrant(src,
+      val writer = HybridStream.serve(src,
         RetrievalQueries.servedBm25Dir(spark, sf),
         RetrievalQueries.servedTokenEmbDir(spark, sf), annDir,
         TextQueries.frozenByteMerges(spark, sf), TextQueries.BpePat,
         s"$base/out", s"$base/ck", k = RetrievalQueries.HybK,
         nprobe = knobs.nprobe, kCand = knobs.kCand,
-        dims = RetrievalQueries.TokDims, grantPairs = grantPairs)
+        dims = RetrievalQueries.TokDims, grantPairs = Some(grantPairs))
       spark.listenerManager.register(listener)
       try {
         val q = writer.trigger(Trigger.AvailableNow()).start()

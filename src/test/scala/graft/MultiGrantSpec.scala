@@ -16,9 +16,12 @@ import graft.queries.RetrievalQueries
   *      construction, so its slice must equal b14 row for row);
   *   2. no account ever sees a doc outside its grant (the g2 masking
   *      discipline at the retrieval tier);
-  *   3. the per-grant lexical serve equals `servedTopKScoped` per
-  *      account — scoped df and scoped N/avgdl, dimension-widened,
-  *      i.e. each account's slice ≡ an index built on its grant alone.
+  *   3. `Bm25.servedTopK` under an (account, doc_id) grant equals it
+  *      under each account's own doc_id grant — scoped df and scoped
+  *      N/avgdl, dimension-widened, i.e. each account's slice ≡ an
+  *      index built on its grant alone;
+  *   4. a grant is a set: a repeated pair serves exactly what the
+  *      deduplicated grant serves, with and without an account column.
   */
 class MultiGrantSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
@@ -72,24 +75,31 @@ class MultiGrantSpec extends AnyFunSuite {
       "no doc served to both accounts — the overlap case is untested")
   }
 
-  test("per-grant lexical serve ≡ servedTopKScoped per account (scoped df + scoped N/avgdl, dimension-widened)") {
-    val pairs = grantPairs.localCheckpoint()
-    val accounts = RetrievalQueries.GrantRows.map(_._1).distinct
-    val aq = accounts
-      .flatMap(a => RetrievalQueries.Queries.map {
-        case (qid, t) => (a, qid, t) })
-      .toDF("account", "query_id", "q_text")
-    val multi = Bm25.servedTopKPerGrant(spark,
-        RetrievalQueries.servedBm25Dir(spark, d), aq,
-        RetrievalQueries.HybK, pairs)
-      .orderBy("account", "query_id", "rnk")
+  private val accounts = RetrievalQueries.GrantRows.map(_._1).distinct
+
+  private def accountQueries = accounts
+    .flatMap(a => RetrievalQueries.Queries.map {
+      case (qid, t) => (a, qid, t) })
+    .toDF("account", "query_id", "q_text")
+
+  private def served(queries: org.apache.spark.sql.DataFrame,
+      pairs: org.apache.spark.sql.DataFrame): Seq[String] = {
+    val dir = RetrievalQueries.servedBm25Dir(spark, d)
+    Bm25.servedTopK(spark, dir, queries, RetrievalQueries.HybK,
+        Some(Bm25.grant(spark, dir, pairs)))
+      .orderBy((queries.columns.filterNot(_ == "q_text") :+ "rnk").map(col): _*)
       .collect().map(_.toString).toSeq
+  }
+
+  test("per-account grant serve ≡ each account's scoped serve (scoped df + scoped N/avgdl, dimension-widened)") {
+    val pairs = grantPairs.localCheckpoint()
+    val multi = served(accountQueries, pairs)
     val perAccount = accounts.flatMap { a =>
-      Bm25.servedTopKScoped(spark,
-          RetrievalQueries.servedBm25Dir(spark, d),
+      val dir = RetrievalQueries.servedBm25Dir(spark, d)
+      Bm25.servedTopK(spark, dir,
           RetrievalQueries.Queries.toDF("query_id", "q_text"),
-          RetrievalQueries.HybK,
-          pairs.filter(col("account") === a).select("doc_id"))
+          RetrievalQueries.HybK, Some(Bm25.grant(spark, dir,
+            pairs.filter(col("account") === a).select("doc_id"))))
         .select(lit(a).as("account"), col("query_id"), col("rnk"),
           col("doc_id"), col("score_e15"), col("n_matched_terms"))
         .collect().map(_.toString).toSeq
@@ -97,5 +107,19 @@ class MultiGrantSpec extends AnyFunSuite {
     assert(multi.nonEmpty)
     assert(multi === perAccount,
       "the one-plan multi-grant serve diverged from per-account scoped serves")
+  }
+
+  test("a grant is a set: a repeated pair serves what the deduplicated grant serves") {
+    val pairs = grantPairs.localCheckpoint()
+    // repeat every acct_a pair: at the inner-joined per-account face
+    // this doubled those docs' df, scores, n_matched_terms and n_docs
+    val repeated = pairs.union(pairs.filter(col("account") === "acct_a"))
+    assert(repeated.count() > pairs.count())
+    assert(served(accountQueries, repeated) === served(accountQueries, pairs),
+      "a repeated (account, doc_id) row changed the per-account serve")
+    val allowed = pairs.filter(col("account") === "acct_a").select("doc_id")
+    val queries = RetrievalQueries.Queries.toDF("query_id", "q_text")
+    assert(served(queries, allowed.union(allowed)) === served(queries, allowed),
+      "a repeated doc_id changed the single-consumer serve")
   }
 }
