@@ -5,11 +5,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit, max}
 
 /** The one owner of the on-disk artifact protocol: durable model
-  * artifacts publish by rename and self-heal a crashed swap, their
-  * append-only logs number rows by `seq`, and every "read it if it is
-  * there" goes through one presence rule. Session stores use
-  * `tempArtifactDir` instead — the scratch-volume lifecycle a serving
-  * tier's local cache has.
+  * artifacts publish by rename and self-heal a crashed swap, every
+  * append clears what a crashed append left, append-only logs number
+  * rows by `seq`, and every "read it if it is there" goes through one
+  * presence rule. Session stores use `tempArtifactDir` instead — the
+  * scratch-volume lifecycle a serving tier's local cache has.
   */
 object Artifacts {
 
@@ -108,22 +108,37 @@ object Artifacts {
     else None
   }
 
+  /** `store` filtered to the buckets named by the one-column frame
+    * `buckets` (collected once; a partition filter, so untouched buckets
+    * are pruned at listing), or None without evaluating `store` when it
+    * names none. An optional store passes `readIfPresent`; a required
+    * one passes `Some(spark.read.parquet(dir))`, so a missing one throws.
+    */
+  def readTouched(store: => Option[DataFrame], bucketCol: String,
+      buckets: DataFrame): Option[DataFrame] = {
+    val named = buckets.distinct().collect().map(_.get(0)).toSeq
+    if (named.isEmpty) None
+    else store.map(_.filter(col(bucketCol).isin(named: _*)))
+  }
+
+  /** Append `rows` to `dir`, partitioned by `partitionCols`. One writer
+    * per dir: a `<dir>/_temporary` can only be a crashed append's, and is
+    * deleted first — Hadoop's v1 committer would otherwise publish its
+    * committed task output (`_temporary/0/task_*`) at the next commit.
+    */
+  def append(rows: DataFrame, dir: String, partitionCols: String*): Unit = {
+    remove(rows.sparkSession, s"$dir/_temporary")
+    rows.write.mode("append").partitionBy(partitionCols: _*).parquet(dir)
+  }
+
   /** Append `rows` to the log at `logDir` behind a leading `seq` column,
     * one past the log's largest (1 on an absent or empty log). A
-    * read-modify-write: one writer per log.
-    *
-    * A stale `<logDir>/_temporary` is deleted first. It can only be
-    * left by a crashed append (one writer), and Hadoop's v1 committer
-    * would otherwise publish that job's committed task output
-    * (`_temporary/0/task_*`) into the log at the next job commit.
+    * read-modify-write through `append`: one writer per log.
     */
   def appendToLog(rows: DataFrame, logDir: String): Unit = {
-    val spark = rows.sparkSession
-    val seq = readIfPresent(spark, logDir)
+    val seq = readIfPresent(rows.sparkSession, logDir)
       .fold(0L)(_.agg(coalesce(max("seq"), lit(0L))).first().getLong(0)) + 1
-    remove(spark, s"$logDir/_temporary")
-    rows.select(lit(seq).as("seq") +: rows.columns.map(col): _*)
-      .write.mode("append").parquet(logDir)
+    append(rows.select(lit(seq).as("seq") +: rows.columns.map(col): _*), logDir)
   }
 
   /** Delete `dir` and everything under it; absent is fine. */

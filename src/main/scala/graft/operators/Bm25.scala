@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Artifacts
+
 /** BM25 sparse text retrieval — the lexical twin of the dense ANN
   * serving path (IvfIndex). The reference pipeline ends in dashboard
   * consumption queries (`dp_demo.sql:267-279`); an LLM-data pipeline
@@ -416,6 +418,8 @@ object Bm25 {
     * itself (the DocStream index precedent). The reverse write order
     * would instead LOSE the postings silently — duplicates-then-heal is
     * the safe side. stats/ last; it regenerates via `refreshStats`.
+    * A crash inside either write leaves only `_temporary`, which the
+    * next `Artifacts.append` clears (one writer per index).
     */
   def appendToIndex(delta: DataFrame, idCol: String, textCol: String,
       dir: String): Long = {
@@ -432,25 +436,19 @@ object Bm25 {
     val d = delta.select(col(idCol).as("doc_id"), col(textCol).as("text"))
       .dropDuplicates("doc_id")
       .withColumn("dbucket", pmod(hash(col("doc_id")), lit(nBuckets)))
-    val deltaBuckets = d.select("dbucket").distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val existing = spark.read.parquet(s"$dir/docs")
-      .filter(col("dbucket").isin(deltaBuckets: _*))
-      .select("doc_id")
-    val fresh = d.join(existing, Seq("doc_id"), "left_anti")
+    val fresh = Artifacts.readTouched(Some(spark.read.parquet(s"$dir/docs")),
+        "dbucket", d.select("dbucket"))
+      .fold(d)(docs => d.join(docs.select("doc_id"), Seq("doc_id"), "left_anti"))
       .localCheckpoint() // pin: consumed by two writes below
     val nFresh = fresh.count()
     if (nFresh == 0) return 0L
     val lens = docLengths(fresh, "doc_id", "text")
-    postings(fresh, "doc_id", "text").join(lens, "doc_id")
+    Artifacts.append(postings(fresh, "doc_id", "text").join(lens, "doc_id")
       .withColumn("bucket", pmod(hash(col("term")), lit(nBuckets)))
-      .repartition(col("bucket"))
-      .write.mode("append").partitionBy("bucket")
-      .parquet(s"$dir/postings")
-    lens.withColumn("dbucket", pmod(hash(col("doc_id")), lit(nBuckets)))
-      .repartition(col("dbucket"))
-      .write.mode("append").partitionBy("dbucket")
-      .parquet(s"$dir/docs")
+      .repartition(col("bucket")), s"$dir/postings", "bucket")
+    Artifacts.append(
+      lens.withColumn("dbucket", pmod(hash(col("doc_id")), lit(nBuckets)))
+        .repartition(col("dbucket")), s"$dir/docs", "dbucket")
     refreshStats(spark, dir, nBuckets)
     nFresh
   }

@@ -52,7 +52,8 @@ import org.apache.spark.sql.functions._
   * Single-writer contract (same as every sink here): run compaction when
   * no writer is appending to the affected partitions — a concurrent
   * append into a partition being rewritten would be silently dropped by
-  * the overwrite-at-commit.
+  * the overwrite-at-commit. The appends go through `Artifacts.append`,
+  * which also assumes one writer per dir (it clears `<dir>/_temporary`).
   */
 object Compaction {
 

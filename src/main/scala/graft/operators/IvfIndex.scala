@@ -220,11 +220,12 @@ object IvfIndex {
     * orphan vectors the anti-join cannot see, so after a mid-append
     * crash run `repairPointers` BEFORE re-running the append — it
     * heals the orphans and the re-run's anti-join then skips them.
-    * Single-writer per index: concurrent appends could interleave the
-    * two writes AND race the drift log's `Artifacts.appendToLog` numbering
-    * into duplicate seq values — serialization is the caller's
-    * contract (ADVICE r16; `IvfPq.appendToSaved` carries the same
-    * rule).
+    * Both writes go through `Artifacts.append` (a crashed append's
+    * committed task output is cleared, not published). Single-writer
+    * per index: concurrent appends could interleave the two writes,
+    * delete each other's in-flight output AND race the drift log's seq
+    * numbering — serialization is the caller's contract (ADVICE r16;
+    * `IvfPq.appendToSaved` carries the same rule).
     *
     * The delta's `vec_id`/`embedding` are cast to the stored assignment
     * schema (mixed int/long vec_id across parquet files would poison
@@ -266,11 +267,11 @@ object IvfIndex {
           Quantization.quantize(delta.select(col("vec_id"), col("embedding")))
             .join(delta.select(col("vec_id"), col("cell")), "vec_id")
         else delta
-      assignedDelta.write.mode("append").partitionBy("cell")
-        .parquet(s"$dir/assigned")
-      delta.select(col("vec_id").cast("long").as("vec_id"), col("cell"))
-        .withColumn("_idb", pmod(hash(col("vec_id")), lit(IdBuckets)))
-        .write.mode("append").partitionBy("_idb").parquet(s"$dir/by_id")
+      Artifacts.append(assignedDelta, s"$dir/assigned", "cell")
+      Artifacts.append(
+        delta.select(col("vec_id").cast("long").as("vec_id"), col("cell"))
+          .withColumn("_idb", pmod(hash(col("vec_id")), lit(IdBuckets))),
+        s"$dir/by_id", "_idb")
       // centroid-drift metric (r10 verdict #5): the delta's mean
       // distance to its frozen assigned centroids, over the build
       // corpus's baseline. Rides the already-checkpointed delta — one
@@ -638,10 +639,10 @@ object IvfIndex {
         .take(nprobe)
         .map { case (cell, _) => (qid, qe, cell) }
     }
-    val touchedCells = probes.map(_._3).distinct
+    val probedCells = probes.map(_._3).distinct
     val probed = probes.toDF("query_id", "qe", "cell")
     val candidates = idx.assigned
-      .filter(col("cell").isin(touchedCells: _*)) // partition-pruned scan
+      .filter(col("cell").isin(probedCells: _*)) // partition-pruned scan
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("ne"),
         col("cell"))
     probed.join(candidates, Seq("cell"))

@@ -974,12 +974,11 @@ object IvfPq {
     * operator remembering to run the healer between crash and replay
     * (the `retrain`/`loadModel` → `Artifacts.recoverRetired` self-heal
     * discipline). Cost on a healthy store: one extra pair of
-    * vec_id-only column-pruned projections. Single-writer per artifact:
-    * concurrent appends could interleave the two writes AND race the
-    * drift log's `Artifacts.appendToLog` numbering into duplicate seq
-    * values — serialization is the caller's contract (the `IvfIndex`
-    * append contract), not something two blind `mode("append")`
-    * writers can provide.
+    * vec_id-only column-pruned projections. Single-writer per artifact
+    * (the `IvfIndex` append contract): every write goes through
+    * `Artifacts.append`, whose stale-`_temporary` delete would remove a
+    * concurrent append's in-flight output, and concurrent appends
+    * would race the drift log's seq numbering.
     *
     * Drift: each append logs its mean encode error over the build
     * baseline to `dir/drift_log` — err2 IS the PQ-tier drift statistic
@@ -1023,10 +1022,8 @@ object IvfPq {
       // drift aggregate (the appendToSaved checkpoint discipline)
       val encDelta = PqIndex.encodeQ(residuals(delta, cents), books,
         dims, carry = Seq("cell")).localCheckpoint()
-      delta
-        .write.mode("append").parquet(s"$dir/vectors")
-      encDelta.write.mode("append").partitionBy("cell")
-        .parquet(s"$dir/codes")
+      Artifacts.append(delta, s"$dir/vectors")
+      Artifacts.append(encDelta, s"$dir/codes", "cell")
       Artifacts.readIfPresent(spark, s"$dir/err_baseline").foreach { b =>
         val base = b.collect()(0).getAs[Double]("mean_err2")
         val d = encDelta.agg(avg(col("err2").cast("double")))
@@ -1072,9 +1069,8 @@ object IvfPq {
       .localCheckpoint()
     val healed = orphans.count()
     if (healed > 0)
-      PqIndex.encodeQ(residuals(orphans, cents), books, dims,
-          carry = Seq("cell"))
-        .write.mode("append").partitionBy("cell").parquet(s"$dir/codes")
+      Artifacts.append(PqIndex.encodeQ(residuals(orphans, cents), books, dims,
+        carry = Seq("cell")), s"$dir/codes", "cell")
     healed
   }
 

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Artifacts
+
 /** Late-interaction (ColBERT-shaped, Khattab & Zaharia 2020) MaxSim
   * re-ranking as a pure query: score(q, d) = Σ_{t∈q} max_{w∈d} sim(t, w)
   * — each query term soft-matches its BEST doc token, instead of bag
@@ -129,22 +131,18 @@ object LateInteraction {
       .dropDuplicates("doc_id")
       .withColumn("_idb", pmod(col("doc_id"), lit(nBuckets.toLong)))
       .localCheckpoint() // pin: bucket list + anti-join + write
-    val deltaBuckets = d.select("_idb").distinct()
-      .collect().map(_.getLong(0))
-    val existing = spark.read.parquet(dir)
-      .filter(col("_idb").isin(deltaBuckets.map(Long.box): _*))
-      .select("doc_id").distinct()
-    val fresh = d.join(existing, Seq("doc_id"), "left_anti")
+    val fresh = Artifacts.readTouched(Some(spark.read.parquet(dir)), "_idb",
+        d.select("_idb"))
+      .fold(d)(store => d.join(store.select("doc_id").distinct(), Seq("doc_id"), "left_anti"))
       .localCheckpoint()
     val nFresh = fresh.count()
     if (nFresh > 0)
-      fresh.select(col("doc_id"), col("_idb"),
+      Artifacts.append(fresh.select(col("doc_id"), col("_idb"),
           explode(split(col("text"), " ")).as("term"))
         .filter(col("term") =!= "")
         .select(col("doc_id"), col("_idb"),
           QualityModel.tokenBucket(col("term"), dims).as("db"))
-        .distinct()
-        .write.mode("append").partitionBy("_idb").parquet(dir)
+        .distinct(), dir, "_idb")
     nFresh
   }
 

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Artifacts
+
 /** The (token id → dim-16 integer vector) embedding TABLE as a shipped
   * artifact — closing `HashedEmbedding`'s "a learned table would
   * replace dimWeight with a broadcast lookup and nothing else changes"
@@ -115,8 +117,8 @@ object TokenEmbeddingTable {
       .localCheckpoint()
     val n = fresh.count()
     if (n > 0)
-      embedDocs(BpeTrainer.docTokenIds(fresh, merges, bpePat), table)
-        .write.mode("append").parquet(storeDir)
+      Artifacts.append(embedDocs(BpeTrainer.docTokenIds(fresh, merges, bpePat), table),
+        storeDir)
     n
   }
 

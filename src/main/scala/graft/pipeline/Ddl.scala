@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+
+import graft.Artifacts
 
 /** Table-lifecycle DDL surface (SURVEY §2.1 S10/S11):
   * CTAS (`create table security as select * from ...`, dp_demo.sql:250)
@@ -19,17 +20,6 @@ object Ddl {
     df.sparkSession.read.parquet(path)
   }
 
-  /** TRUNCATE IF EXISTS: keep the table's schema, drop every row. A
-    * no-op when the table does not exist (the `if exists` branch).
-    * Implemented as an overwrite with an empty plan of the same schema.
-    * Single-writer semantics: same-path overwrite deletes the old files
-    * before committing new ones, so a CONCURRENT reader holding the old
-    * file list can fail mid-scan — the parquet commit protocol does not
-    * make in-place overwrite reader-atomic. (Reader-atomic truncate needs
-    * write-to-new-dir + pointer swap, i.e. a table format's metadata
-    * indirection; the pipeline runs truncate only at setup,
-    * dp_demo.sql:16-19, where no readers exist.)
-    */
   /** Warehouse-resize analogue (`alter warehouse dp_wh set
     * warehouse_size=large` before the heavy unload and back to `small`
     * after it — reference dp_demo.sql:111-113,145). Spark has no
@@ -41,7 +31,8 @@ object Ddl {
     * is restored when `body` completes, matching the reference's paired
     * resize-back, and the resize intent is recorded as a task_history
     * row when a metrics path is supplied — the same place the
-    * reference's resize shows up in monitoring views.
+    * reference's resize shows up in monitoring views (through
+    * `Artifacts.append`: one writer per path).
     */
   val warehouseSizes: Map[String, Int] = Map(
     "xsmall" -> 8, "small" -> 16, "medium" -> 32, "large" -> 64, "xlarge" -> 128)
@@ -78,11 +69,10 @@ object Ddl {
         try {
           val state = if (bodyError == null) "SUCCEEDED" else "FAILED"
           val done = clock.now()
-          Metrics.taskHistoryRow(spark, s"alter_warehouse_size_$size", state,
-              scheduled, done, 0L)
+          Artifacts.append(Metrics.taskHistoryRow(spark,
+              s"alter_warehouse_size_$size", state, scheduled, done, 0L)
             .unionByName(Metrics.taskHistoryRow(spark,
-              "alter_warehouse_size_restore", "SUCCEEDED", done, done, 0L))
-            .write.mode("append").parquet(p)
+              "alter_warehouse_size_restore", "SUCCEEDED", done, done, 0L)), p)
         } catch {
           case we: Throwable =>
             if (bodyError != null) bodyError.addSuppressed(we) else throw we
@@ -108,19 +98,26 @@ object Ddl {
     spark.conf.set("spark.sql.shuffle.partitions", partitionsFor(size).toString)
     taskHistoryPath.foreach { p =>
       val now = clock.now()
-      Metrics.taskHistoryRow(spark, s"alter_warehouse_size_$size",
-          "SUCCEEDED", now, now, 0L)
-        .write.mode("append").parquet(p)
+      Artifacts.append(Metrics.taskHistoryRow(spark,
+        s"alter_warehouse_size_$size", "SUCCEEDED", now, now, 0L), p)
     }
   }
 
-  def truncate(spark: SparkSession, path: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new org.apache.hadoop.fs.Path(path).toUri, spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(path))) {
-      val schema: StructType = spark.read.parquet(path).schema
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  /** TRUNCATE IF EXISTS: keep the table's schema, drop every row. A
+    * no-op when the table does not exist or holds no data file (the
+    * `if exists` branch; `Artifacts.readIfPresent`'s rule).
+    * Implemented as an overwrite with an empty plan of the same schema.
+    * Single-writer semantics: same-path overwrite deletes the old files
+    * before committing new ones, so a CONCURRENT reader holding the old
+    * file list can fail mid-scan — the parquet commit protocol does not
+    * make in-place overwrite reader-atomic. (Reader-atomic truncate needs
+    * write-to-new-dir + pointer swap, i.e. a table format's metadata
+    * indirection; the pipeline runs truncate only at setup,
+    * dp_demo.sql:16-19, where no readers exist.)
+    */
+  def truncate(spark: SparkSession, path: String): Unit =
+    Artifacts.readIfPresent(spark, path).foreach { table =>
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], table.schema)
         .write.mode("overwrite").parquet(path)
     }
-  }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.BatchSink
+import graft.{Artifacts, BatchSink}
 
 /** Directory layout for one pipeline instance — the analogue of the
   * reference's `snowflake_demo` database (raw + modelled schemas,
@@ -44,7 +44,9 @@ final case class PipelinePaths(root: String) {
   * Crash-replay idempotence (SURVEY §7.4 #1): fact + metrics writes go
   * through `BatchSink.writeBatch` to a `_batch_id=` partition (replay
   * overwrites, never duplicates); dimension appends are anti-joined
-  * against the already-committed table.
+  * against the already-committed table and go through `Artifacts.append`
+  * (the stream is their one writer), so a crashed append's task output
+  * is cleared, not published as duplicate keys.
   */
 final class Pipeline(
     spark: SparkSession,
@@ -98,7 +100,7 @@ final class Pipeline(
           val survivors =
             mergeInsertOnly(programs(), newPrograms(batch), "program_id")
           val n = survivors.count()
-          if (n > 0) survivors.write.mode("append").parquet(paths.programs)
+          if (n > 0) Artifacts.append(survivors, paths.programs)
           n
         }
 
@@ -109,7 +111,7 @@ final class Pipeline(
           val survivors =
             mergeInsertOnly(stations(), newStations(batch), "station_id")
           val n = survivors.count()
-          if (n > 0) survivors.write.mode("append").parquet(paths.stations)
+          if (n > 0) Artifacts.append(survivors, paths.stations)
           n
         }
 

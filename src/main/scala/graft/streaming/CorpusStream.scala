@@ -39,6 +39,8 @@ import graft.operators.QualityModel
   * `Compaction.compact(dropExactDuplicates = true)` (the DocStream
   * contract, same trade: same-id cross-batch REDELIVERY is
   * indistinguishable from replay and yields a second kept decision).
+  * The append goes through `Artifacts.append` (the stream is the index's
+  * one writer): a crashed append's committed task output is cleared.
   */
 object CorpusStream {
 
@@ -84,15 +86,11 @@ object CorpusStream {
       // localCheckpoint pins `kept` — it feeds TWO writes below, and
       // without it the pruned read + join + groupBy would execute
       // twice per batch (review r12; repRows' own precedent).
-      val touched = repRows.select("sigbucket").distinct()
-        .collect().map(_.getInt(0)).toSeq
       val entriesDir = s"$indexDir/entries"
-      val stored =
-        if (touched.isEmpty) None else Artifacts.readIfPresent(spark, entriesDir)
+      val stored = Artifacts.readTouched(Artifacts.readIfPresent(spark, entriesDir),
+        "sigbucket", repRows.select("sigbucket"))
       val kept = stored.fold(repRows) { entries =>
-        val idx = entries
-          .filter(col("sigbucket").isin(touched: _*))
-          .select(col("sig"), col("doc_id").as("_old_id"))
+        val idx = entries.select(col("sig"), col("doc_id").as("_old_id"))
         repRows.join(idx, Seq("sig"), "left")
           .groupBy(repRows.columns.map(col): _*)
           .agg(min(when(col("_old_id") =!= col("doc_id"), col("_old_id")))
@@ -110,9 +108,8 @@ object CorpusStream {
           col("n_tokens"), col("split"))
       BatchSink.writeBatch(cleaned, outDir, batchId)
       // 5. grow the index with this batch's kept signatures
-      kept.select("sig", "doc_id", "sigbucket")
-        .repartition(col("sigbucket"))
-        .write.mode("append").partitionBy("sigbucket").parquet(entriesDir)
+      Artifacts.append(kept.select("sig", "doc_id", "sigbucket")
+        .repartition(col("sigbucket")), entriesDir, "sigbucket")
     }
   }
 }

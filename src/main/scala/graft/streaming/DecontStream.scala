@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.BatchSink
+import graft.{Artifacts, BatchSink}
 import graft.operators.DedupOps
 
 /** STREAMING decontamination — `DedupOps.crossSplitOverlap` for the
@@ -69,15 +69,15 @@ object DecontStream {
       val spark = batch.sparkSession
       val g = grams(batch, idCol, textCol, n).localCheckpoint()
       // the batch's gram buckets bound the index read: ≤ batch-gram
-      // count of the 64 bucket directories are listed at all
-      val touched = g.select("_bucket").distinct()
-        .collect().map(_.getInt(0)).toSeq
-      val hits =
-        if (touched.isEmpty) g.select(col("doc_id"), lit(0L).as("n_hits")).limit(0)
-        else spark.read.parquet(indexDir)
-          .filter(col("_bucket").isin(touched: _*))
-          .join(g, Seq("_bucket", "shingle"))
-          .groupBy("doc_id").agg(count(lit(1)).as("n_hits"))
+      // count of the 64 bucket directories are listed at all. The
+      // index is required: a missing one throws, it never reads as
+      // empty (which would pass every document as clean)
+      val hits = Artifacts.readTouched(Some(spark.read.parquet(indexDir)),
+          "_bucket", g.select("_bucket"))
+        .fold(g.select(col("doc_id"), lit(0L).as("n_hits")).limit(0)) {
+          _.join(g, Seq("_bucket", "shingle"))
+            .groupBy("doc_id").agg(count(lit(1)).as("n_hits"))
+        }
       val decisions = batch.select(col(idCol).cast("long").as("doc_id"))
         .join(hits, Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("n_hits"), lit(0L)).as("n_hits"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.BatchSink
+import graft.{Artifacts, BatchSink}
 import graft.operators.DedupOps
 
 /** STREAMING near-duplicate dedup over a document stream — the in-flight
@@ -59,7 +59,8 @@ import graft.operators.DedupOps
   * cross-batch match EXCLUDES self-pairs, so a replayed batch that
   * finds its own already-indexed entries reproduces its original
   * decisions rather than matching kept docs against themselves — and a
-  * periodic compaction can drop exact-duplicate rows.
+  * periodic compaction can drop exact-duplicate rows. The append goes
+  * through `Artifacts.append` (the stream is the index's one writer).
   */
 object DocStream {
 
@@ -248,38 +249,33 @@ object DocStream {
       // cross-batch matches: smallest INDEXED (= earlier kept) doc
       // sharing a band bucket at estimate >= threshold — the read is
       // partition-pruned to the batch's own buckets
-      val indexPath = new org.apache.hadoop.fs.Path(indexDir)
-      val fs = indexPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val touched = entries.select("_bucket").distinct()
-        .collect().map(_.getInt(0)).toSeq
-      val crossMatch: Map[Long, Long] =
-        if (fs.exists(indexPath) && touched.nonEmpty) {
-          spark.read.schema(entries.schema).parquet(indexDir)
-            .filter(col("_bucket").isin(touched: _*))
-            .select(col("doc_id").as("old_id"), col("sig").as("old_sig"),
-              col("band_key"))
-            .join(entries.select(col("doc_id").as("new_id"), col("sig"),
-              col("band_key")), Seq("band_key"))
-            // a doc never matches ITSELF: on crash-replay (index append
-            // landed, checkpoint commit did not) the re-executed batch
-            // finds its own kept docs' entries in the index at estimate
-            // 1.0 — without this guard every previously-kept doc would
-            // be rewritten as dropped-matching-itself, permanently
-            // corrupting the replayed decisions (review r10). The cost
-            // (r10 advice): a LEGITIMATE cross-batch redelivery of the
-            // same doc_id is indistinguishable from replay, so it is
-            // also suppressed — the redelivered doc reports kept again
-            // and re-appends duplicate index entries (harmless to
-            // decisions; healed by `Compaction` with
-            // dropExactDuplicates). Upstreams that re-emit ids across
-            // batches get at-least-once kept records, not a dup report
-            .filter(col("old_id") =!= col("new_id"))
-            .groupBy("new_id", "old_id")
-            .agg(first(estimate(col("sig"), col("old_sig"), k)).as("est"))
-            .filter(col("est") >= threshold)
-            .groupBy("new_id").agg(min("old_id").as("matched"))
-            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        } else Map.empty
+      val stored = Artifacts.readTouched(Artifacts.readIfPresent(spark, indexDir),
+        "_bucket", entries.select("_bucket"))
+      val crossMatch: Map[Long, Long] = stored.fold(Map.empty[Long, Long]) { idx =>
+        idx.select(col("doc_id").as("old_id"), col("sig").as("old_sig"),
+            col("band_key"))
+          .join(entries.select(col("doc_id").as("new_id"), col("sig"),
+            col("band_key")), Seq("band_key"))
+          // a doc never matches ITSELF: on crash-replay (index append
+          // landed, checkpoint commit did not) the re-executed batch
+          // finds its own kept docs' entries in the index at estimate
+          // 1.0 — without this guard every previously-kept doc would
+          // be rewritten as dropped-matching-itself, permanently
+          // corrupting the replayed decisions (review r10). The cost
+          // (r10 advice): a LEGITIMATE cross-batch redelivery of the
+          // same doc_id is indistinguishable from replay, so it is
+          // also suppressed — the redelivered doc reports kept again
+          // and re-appends duplicate index entries (harmless to
+          // decisions; healed by `Compaction` with
+          // dropExactDuplicates). Upstreams that re-emit ids across
+          // batches get at-least-once kept records, not a dup report
+          .filter(col("old_id") =!= col("new_id"))
+          .groupBy("new_id", "old_id")
+          .agg(first(estimate(col("sig"), col("old_sig"), k)).as("est"))
+          .filter(col("est") >= threshold)
+          .groupBy("new_id").agg(min("old_id").as("matched"))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
       val pairs = collidingPairs(entries, k, threshold, maxCandidates)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       val folded = greedyFold(crossMatch, pairs)
@@ -299,8 +295,7 @@ object DocStream {
           entries.join(broadcast(dropped.toDF("doc_id")),
             Seq("doc_id"), "left_anti")
         }
-      if (!keptEntries.isEmpty)
-        keptEntries.write.mode("append").partitionBy("_bucket").parquet(indexDir)
+      if (!keptEntries.isEmpty) Artifacts.append(keptEntries, indexDir, "_bucket")
     }
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.BatchSink
+import graft.{Artifacts, BatchSink}
 import graft.operators.SimilarityOps
 
 /** STREAMING embedding-cosine near-dup dedup — `DocStream.nearDupFilter`
@@ -89,29 +89,24 @@ object EmbedStream {
 
       // the probe set bounds the index read: ≤ batch × (bits+1) codes,
       // each a partition directory of the index
-      val touched = p.select("probe").distinct()
-        .collect().map(_.getLong(0)).toSeq
-      val indexPath = new org.apache.hadoop.fs.Path(indexDir)
-      val fs = indexPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val crossMatch: Map[Long, Long] =
-        if (fs.exists(indexPath) && touched.nonEmpty) {
-          spark.read.schema(b.schema).parquet(indexDir)
-            .filter(col("bucket").isin(touched: _*))
-            .select(col("doc_id").as("old_id"), col("embedding").as("old_emb"),
-              col("bucket").as("probe"))
-            .join(p.select(col("doc_id").as("new_id"),
-              col("embedding").as("new_emb"), col("probe")), Seq("probe"))
-            // self-match guard: on crash-replay the batch's own kept
-            // vectors are already indexed at cosine 1.0 — same
-            // corruption as DocStream without it, and the same
-            // documented cost: same-id cross-batch redelivery is
-            // indistinguishable from replay, so it re-reports kept and
-            // duplicates index entries (healed by compaction)
-            .filter(col("old_id") =!= col("new_id"))
-            .filter(expr("graft_cosine(new_emb, old_emb)") >= threshold)
-            .groupBy("new_id").agg(min("old_id").as("matched"))
-            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        } else Map.empty
+      val stored = Artifacts.readTouched(Artifacts.readIfPresent(spark, indexDir),
+        "bucket", p.select("probe"))
+      val crossMatch: Map[Long, Long] = stored.fold(Map.empty[Long, Long]) { idx =>
+        idx.select(col("doc_id").as("old_id"), col("embedding").as("old_emb"),
+            col("bucket").as("probe"))
+          .join(p.select(col("doc_id").as("new_id"),
+            col("embedding").as("new_emb"), col("probe")), Seq("probe"))
+          // self-match guard: on crash-replay the batch's own kept
+          // vectors are already indexed at cosine 1.0 — same
+          // corruption as DocStream without it, and the same
+          // documented cost: same-id cross-batch redelivery is
+          // indistinguishable from replay, so it re-reports kept and
+          // duplicates index entries (healed by compaction)
+          .filter(col("old_id") =!= col("new_id"))
+          .filter(expr("graft_cosine(new_emb, old_emb)") >= threshold)
+          .groupBy("new_id").agg(min("old_id").as("matched"))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
       // within-batch pairs over reps only, capped per later doc — the
       // same fail-open driver-row bound as DocStream.collidingPairs
       val pairs = p.select(col("doc_id").as("d1"),
@@ -141,8 +136,7 @@ object EmbedStream {
           import spark.implicits._
           b.join(broadcast(dropped.toDF("doc_id")), Seq("doc_id"), "left_anti")
         }
-      if (!keptEntries.isEmpty)
-        keptEntries.write.mode("append").partitionBy("bucket").parquet(indexDir)
+      if (!keptEntries.isEmpty) Artifacts.append(keptEntries, indexDir, "bucket")
     }
   }
 

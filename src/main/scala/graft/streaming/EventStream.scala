@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
-import graft.BatchSink
+import graft.{Artifacts, BatchSink}
 
 /** Event-time streaming over the `events` table shape (builder brief:
   * "watermarks + windowed aggs; mapGroupsWithState/flatMapGroupsWithState
@@ -268,11 +268,12 @@ object EventStream {
     * directory hash-partitioned on `_bucket = pmod(hash(id), nBuckets)`
     * so the per-batch merge is FILE-PRUNED the way a keyed MERGE INTO
     * on Delta/Iceberg prunes data files: the batch's ids determine the
-    * touched buckets, the merge reads ONLY those buckets (partition
-    * pruning on the filter), and dynamic partition overwrite rewrites
-    * ONLY those buckets — untouched bucket files are never read or
-    * replaced (StreamingSpec asserts their file lists and mtimes are
-    * unchanged across a later micro-batch). Per-batch cost is therefore
+    * touched buckets, the merge reads ONLY those buckets
+    * (`Artifacts.readTouched`: partition pruning on the filter; schema
+    * inference reads one file footer), and dynamic partition overwrite
+    * rewrites ONLY those buckets — untouched bucket files are never
+    * scanned or replaced (StreamingSpec asserts their file lists and
+    * mtimes are unchanged across a later micro-batch). Per-batch cost is therefore
     * O(ids in touched buckets), not O(all ids ever seen): with ids
     * hashing uniformly over `nBuckets`, a batch touching b buckets
     * rewrites ~b/nBuckets of the sink however large the id history
@@ -304,44 +305,40 @@ object EventStream {
         .withColumn("_bucket", pmod(hash(col(idCol)), lit(nBuckets)))
       // the touched-bucket set is bounded by nBuckets — a metadata-
       // sized collect, same class as Pipeline's file listings
-      val touched = newMin.select("_bucket").distinct()
-        .collect().map(_.getInt(0)).toSeq
-      val sinkPath = new org.apache.hadoop.fs.Path(sinkDir)
-      val fs = sinkPath.getFileSystem(sess.sparkContext.hadoopConfiguration)
-      if (touched.nonEmpty) {
-        val merged0 =
-          if (fs.exists(sinkPath)) {
-            // explicit schema (partition col included): the directory
-            // may be mid-rewrite from a prior batch's perspective, and
-            // the filter on the partition column prunes every
-            // untouched bucket at file-listing time
-            val existingTouched = sess.read.schema(newMin.schema).parquet(sinkDir)
-              .filter(col("_bucket").isin(touched: _*))
-            dedupBatch(existingTouched.unionByName(newMin), idCol)
-          } else newMin
-        val merged = retentionMs.fold(merged0) { ms =>
-          // horizon anchored at the batch's max event time — the
-          // foreachBatch stand-in for the stream's watermark
-          val maxTs = batch.agg(max(col("ts"))).head.getTimestamp(0)
-          if (maxTs == null) merged0
-          else merged0.filter(
-            col("ts") >= lit(new java.sql.Timestamp(maxTs.getTime - ms)))
-        }
-        // dynamic partition overwrite only rewrites buckets PRESENT in
-        // `merged` — a touched bucket whose rows ALL expired under the
-        // retention horizon would keep its stale pre-merge files (the
-        // dropped ids would resurrect with their old values). Delete
-        // those bucket directories explicitly, as compactSink does.
-        val mergedC = merged.localCheckpoint()
-        val keptBuckets = mergedC.select("_bucket").distinct()
-          .collect().map(_.getInt(0)).toSet
-        if (keptBuckets.nonEmpty)
-          BatchSink.overwritePartitions(mergedC, sinkDir, "_bucket")
-        touched.filterNot(keptBuckets).foreach { b =>
-          fs.delete(new org.apache.hadoop.fs.Path(s"$sinkDir/_bucket=$b"), true)
-        }
+      val merged = Artifacts.readTouched(Artifacts.readIfPresent(sess, sinkDir),
+          "_bucket", newMin.select("_bucket"))
+        .fold(newMin)(stored => dedupBatch(stored.unionByName(newMin), idCol))
+      // horizon anchored at the batch's max event time — the
+      // foreachBatch stand-in for the stream's watermark
+      val cutoff = retentionMs.flatMap { ms =>
+        Option(batch.agg(max(col("ts"))).head.getTimestamp(0))
+          .map(t => new Timestamp(t.getTime - ms))
       }
+      rewriteBuckets(merged, sinkDir, cutoff)
     }
+
+  /** Rewrite the buckets `rows` holds in the `_bucket`-partitioned
+    * `sinkDir`, keeping the rows at or after `cutoff` (all of them when
+    * None). Dynamic partition overwrite only rewrites buckets present
+    * in what it writes, so a bucket whose rows ALL fall before the
+    * cutoff would keep its stale files (the dropped ids would
+    * resurrect with their old values): such buckets are deleted
+    * outright. `rows` is materialized first — its lineage may read the
+    * buckets being replaced.
+    */
+  private def rewriteBuckets(rows: DataFrame, sinkDir: String,
+      cutoff: Option[Timestamp]): Unit = {
+    val live = cutoff.fold(lit(true))(c => coalesce(col("ts") >= lit(c), lit(false)))
+    val flagged = rows.withColumn("_live", live).localCheckpoint()
+    val buckets = flagged.groupBy("_bucket").agg(max("_live"))
+      .collect().map(r => r.getInt(0) -> r.getBoolean(1))
+    if (buckets.exists(_._2))
+      BatchSink.overwritePartitions(
+        flagged.filter(col("_live")).drop("_live"), sinkDir, "_bucket")
+    buckets.filterNot(_._2).foreach { case (b, _) =>
+      Artifacts.remove(rows.sparkSession, s"$sinkDir/_bucket=$b")
+    }
+  }
 
   /** Maintenance sweep for a `dedupStreamMinBy` sink: drop rows whose
     * event time (`ts`) falls more than `retentionMs` before the sink's
@@ -359,23 +356,10 @@ object EventStream {
     val df = spark.read.parquet(sinkDir)
     val maxTs = df.agg(max(col("ts"))).head.getTimestamp(0)
     if (maxTs != null) {
-      val cutoff = new java.sql.Timestamp(maxTs.getTime - retentionMs)
-      val touched = df.filter(col("ts") < lit(cutoff))
-        .select("_bucket").distinct().collect().map(_.getInt(0)).toSeq
-      if (touched.nonEmpty) {
-        val kept = df
-          .filter(col("_bucket").isin(touched: _*) && col("ts") >= lit(cutoff))
-          .localCheckpoint() // materialize before touching the directory
-        val keptBuckets = kept.select("_bucket").distinct()
-          .collect().map(_.getInt(0)).toSet
-        if (keptBuckets.nonEmpty)
-          BatchSink.overwritePartitions(kept, sinkDir, "_bucket")
-        val fs = new org.apache.hadoop.fs.Path(sinkDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        touched.filterNot(keptBuckets).foreach { b =>
-          fs.delete(new org.apache.hadoop.fs.Path(s"$sinkDir/_bucket=$b"), true)
-        }
-      }
+      val cutoff = new Timestamp(maxTs.getTime - retentionMs)
+      Artifacts.readTouched(Some(df), "_bucket",
+          df.filter(col("ts") < lit(cutoff)).select("_bucket"))
+        .foreach(rewriteBuckets(_, sinkDir, Some(cutoff)))
     }
   }
 

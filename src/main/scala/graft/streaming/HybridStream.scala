@@ -86,14 +86,14 @@ object HybridStream {
       val b = batch.dropDuplicates(qKeys).localCheckpoint()
       val lex = Bm25.servedTopK(spark, bm25Dir, b, k, grant)
         .select((qKeys ++ Seq("doc_id", "rnk")).map(col): _*)
-      val texts = b.select(col("query_id").as("doc_id"),
-        col("q_text").as("text"))
-      // a keyed batch repeats a query's text once per key: embed each
-      // text once and fan the vector out to its keys
-      val qvecs =
-        if (keys.isEmpty) TokenEmbeddingTable.queryVecs(texts, merges, bpePat, table)
-        else b.select(qKeys.map(col): _*).join(TokenEmbeddingTable.queryVecs(
-          texts.dropDuplicates("doc_id"), merges, bpePat, table), Seq("query_id"))
+      // embed each distinct text once and join the vector back on the
+      // text, not on query_id: a keyed batch repeats a query once per
+      // key, and two keys may send one query_id with different texts
+      val texts = b.select(col("q_text").as("doc_id"), col("q_text").as("text"))
+        .distinct()
+      val qvecs = b.join(TokenEmbeddingTable.queryVecs(texts, merges, bpePat, table)
+          .withColumnRenamed("query_id", "q_text"), Seq("q_text"))
+        .select((qKeys :+ "qv").map(col): _*)
       val dense = IvfPq.searchRerankDf(codes, vectors, qvecs, cents,
           books, nprobe, kCand, k, dims, excludeSelf = false,
           scopeCols = keys)

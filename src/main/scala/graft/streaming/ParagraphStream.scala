@@ -37,7 +37,8 @@ import graft.operators.DedupOps
   * replayed batch reproduces its original keep/cut decisions over its
   * own partial append; the re-append leaves byte-identical duplicate
   * rows, harmless to lookups and healed by
-  * `Compaction.compact(dropExactDuplicates = true)`.
+  * `Compaction.compact(dropExactDuplicates = true)`. The append goes
+  * through `Artifacts.append` (the stream is the index's one writer).
   */
 object ParagraphStream {
 
@@ -58,15 +59,11 @@ object ParagraphStream {
         .filter(col("okey") === col("bokey")).drop("bokey")
         .localCheckpoint()
       // cross-batch: pruned lookup, same-doc entries self-excluded
-      val touched = batchKept.select("hbucket").distinct()
-        .collect().map(_.getInt(0)).toSeq
       val entriesDir = s"$indexDir/entries"
-      val stored =
-        if (touched.isEmpty) None else Artifacts.readIfPresent(spark, entriesDir)
+      val stored = Artifacts.readTouched(Artifacts.readIfPresent(spark, entriesDir),
+        "hbucket", batchKept.select("hbucket"))
       val kept = stored.fold(batchKept) { entries =>
-        val idx = entries
-          .filter(col("hbucket").isin(touched: _*))
-          .select(col("h"), col("okey").as("_old"))
+        val idx = entries.select(col("h"), col("okey").as("_old"))
         batchKept.join(idx, Seq("h"), "left")
           .groupBy(batchKept.columns.map(col): _*)
           .agg(min(when(expr("_old div 1000000L") =!= col("doc_id"),
@@ -89,9 +86,8 @@ object ParagraphStream {
           coalesce(col("text_clean"), lit("")).as("text_clean"))
       BatchSink.writeBatch(cleaned, outDir, batchId)
       // grow the index with this batch's kept occurrences
-      kept.select("h", "okey", "hbucket")
-        .repartition(col("hbucket"))
-        .write.mode("append").partitionBy("hbucket").parquet(entriesDir)
+      Artifacts.append(kept.select("h", "okey", "hbucket")
+        .repartition(col("hbucket")), entriesDir, "hbucket")
     }
   }
 }

@@ -79,15 +79,57 @@ class ArtifactsSpec extends AnyFunSuite {
     assert(seqs(log) === Seq((1L, "a")))
   }
 
+  // a job that died after committing a task but before committing
+  // itself: the v1 committer's committed-task dir under _temporary/0
+  private def plantCommittedTask(dir: String, rows: org.apache.spark.sql.DataFrame,
+      partitionCols: String*): Unit =
+    rows.write.partitionBy(partitionCols: _*)
+      .parquet(s"$dir/_temporary/0/task_202601010000_0001_m_000000")
+
   test("a crashed append's committed task output is not published by the next append") {
     val log = newDir()
     Artifacts.appendToLog(Seq("a").toDF("v"), log)
-    // a job that died after committing a task but before committing
-    // itself: the v1 committer's committed-task dir under _temporary/0
-    Seq((9L, "orphan")).toDF("seq", "v").write
-      .parquet(s"$log/_temporary/0/task_202601010000_0001_m_000000")
+    plantCommittedTask(log, Seq((9L, "orphan")).toDF("seq", "v"))
     Artifacts.appendToLog(Seq("b").toDF("v"), log)
     assert(seqs(log) === Seq((1L, "a"), (2L, "b")))
+    // the same for a partitioned append
+    val idx = newDir()
+    Artifacts.append(Seq((1L, 0)).toDF("x", "b"), idx, "b")
+    plantCommittedTask(idx, Seq((9L, 0), (9L, 1)).toDF("x", "b"), "b")
+    Artifacts.append(Seq((2L, 1)).toDF("x", "b"), idx, "b")
+    assert(spark.read.parquet(idx).select("x", "b").as[(Long, Int)]
+      .collect().toSeq.sorted === Seq((1L, 0), (2L, 1)))
+  }
+
+  private def buckets(values: Int*) = values.toDF("b")
+
+  test("readTouched over an empty touched set does not read the store") {
+    var read = false
+    val got = Artifacts.readTouched({ read = true; None }, "b", buckets())
+    assert(got.isEmpty && !read)
+  }
+
+  test("readTouched over an absent store or one holding only _temporary/ is None") {
+    val dir = newDir()
+    assert(Artifacts.readTouched(Artifacts.readIfPresent(spark, dir), "b",
+      buckets(1)).isEmpty)
+    plantCommittedTask(dir, Seq((9L, 1)).toDF("x", "b"), "b")
+    assert(Artifacts.readTouched(Artifacts.readIfPresent(spark, dir), "b",
+      buckets(1)).isEmpty)
+  }
+
+  test("readTouched returns only the touched buckets' rows and never scans an untouched bucket") {
+    val dir = newDir()
+    Artifacts.append(Seq((10L, 1), (11L, 1), (20L, 2), (30L, 3)).toDF("x", "b"),
+      dir, "b")
+    // corrupt bucket 3's only data file: a scan of it would throw
+    new File(s"$dir/b=3").listFiles().filter(_.getName.endsWith(".parquet"))
+      .foreach(f => Files.write(f.toPath, "not parquet".getBytes))
+    intercept[Exception](spark.read.parquet(dir).collect())
+    val got = Artifacts.readTouched(Artifacts.readIfPresent(spark, dir), "b",
+      buckets(1, 2, 2, 1)).get
+    assert(got.select("x", "b").as[(Long, Int)].collect().toSeq.sorted ===
+      Seq((10L, 1), (11L, 1), (20L, 2)))
   }
 
   test("a log holding only a zero-row file appends from seq 1") {

@@ -63,4 +63,22 @@ class DecontStreamSpec extends AnyFunSuite {
     assert(run(Seq(trainDocs.take(1), trainDocs.drop(1)), onePer = true)
       === expected)
   }
+
+  test("a filter over a missing gram index throws instead of passing every document as clean") {
+    val base = Files.createTempDirectory("graft_dc_missing").toString
+    val srcDir = s"$base/src"
+    trainDocs.toDF("doc_id", "text").coalesce(1).write.parquet(s"$srcDir/f0")
+    val q = DecontStream.decontaminateFilter(
+        spark.readStream.schema(docSchema).parquet(s"$srcDir/*"),
+        s"$base/no_index", s"$base/out", s"$base/ck")
+      .trigger(Trigger.AvailableNow()).start()
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      q.awaitTermination()
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("no_index")),
+      s"the failure must name the missing index: $e")
+    assert(!new java.io.File(s"$base/out").exists(),
+      "no verdict may be written without the index")
+  }
 }

@@ -108,6 +108,39 @@ class HybridStreamSpec extends AnyFunSuite {
   private val aRows = RetrievalQueries.GrantRows.map(_._1).distinct
     .flatMap(a => queries.map { case (qid, t) => (a, qid, t) })
 
+  /** One AvailableNow per-account serve of `rows` (one batch) under
+    * `grantPairs`, as (account, query_id, rnk, doc_id, rrf_e12, n_lists)
+    * strings.
+    */
+  private def serveAccounts(rows: Seq[(String, Long, String)]): Set[String] = {
+    val srcDir = Files.createTempDirectory("graft_hyb_acct_src").toString
+    val base = Files.createTempDirectory("graft_hyb_acct").toString
+    rows.toDF("account", "query_id", "q_text").coalesce(1).write.parquet(s"$srcDir/f0")
+    val annDir = RetrievalQueries.servedTokenIvfPqDir(spark, sf)
+    val knobs = graft.operators.IvfPq.loadKnobs(spark, annDir).get
+    HybridStream.serve(spark.readStream.schema(aSchema).parquet(s"$srcDir/*"),
+        RetrievalQueries.servedBm25Dir(spark, sf),
+        RetrievalQueries.servedTokenEmbDir(spark, sf), annDir,
+        TextQueries.frozenByteMerges(spark, sf), TextQueries.BpePat,
+        s"$base/out", s"$base/ck", k = RetrievalQueries.HybK,
+        nprobe = knobs.nprobe, kCand = knobs.kCand,
+        dims = RetrievalQueries.TokDims, grantPairs = Some(grantPairs))
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    spark.read.parquet(s"$base/out")
+      .select("account", "query_id", "rnk", "doc_id", "rrf_e12", "n_lists")
+      .collect().map(_.toString).toSet
+  }
+
+  test("two accounts sending one query_id with different texts each get their own text's answer") {
+    val Seq(a, b) = RetrievalQueries.GrantRows.map(_._1).distinct.take(2)
+    val (qid, textA) = queries.head
+    val textB = queries(1)._2
+    val alone = Seq((a, qid, textA), (b, qid, textB)).map(r => serveAccounts(Seq(r)))
+    assert(alone.forall(_.nonEmpty), "a single-account serve is empty")
+    assert(serveAccounts(Seq((a, qid, textA), (b, qid, textB))) === alone.reduce(_ ++ _),
+      "an account's fused result used another account's query text")
+  }
+
   test("scoped stream prices the grant's stats ONCE at definition: no batch plan ever scans the docs store (VERDICT r19 #3)") {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
