@@ -4,6 +4,10 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark main — one JSON line on stdout per the driver contract,
   * duplicated to `BENCH_LOCAL.json` (override: SPARK_GRAFT_BENCH_OUT)
   * so a bounded stdout tail can never lose the per-query record again.
+  * Each entry's profile (`graft.Profiler`: build/exec split, jobs,
+  * stages, tasks, shuffle, spill, I/O bytes, GC and a plan-shape digest)
+  * goes beside it to `X.profile.json`, or to a labelled
+  * `[bench] profile=` stdout line when no output file is written.
   *
   * Each query executes against a `noop` sink so the FULL physical plan
   * runs (projection, masking exprs, final sort included): a bare
@@ -135,13 +139,19 @@ object Bench {
     var erroredReps = 0
     val ordered = selected.toSeq.sortBy(_._1)
     val midIdx = ordered.size / 2
+    // Every timed rep is profiled (graft.Profiler): its window splits
+    // into build_s + exec_s, and the record of the rep whose time is
+    // reported (the min) is kept per entry.
+    val profiler = new Profiler(spark)
+    val profiles = scala.collection.mutable.Map.empty[String, Profiler.Record]
     def runOnce(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         reps: scala.collection.mutable.ListBuffer[Double]): Unit = {
-      val t0 = System.nanoTime()
       try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        reps += (System.nanoTime() - t0) / 1e9
+        val rec = profiler.profile(name)(fn(spark, sfDir))(
+          _.write.format("noop").mode("overwrite").save())
+        if (reps.forall(t => t < 0 || rec.seconds < t)) profiles(name) = rec
+        reps += rec.seconds
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
@@ -254,7 +264,10 @@ object Bench {
     // the record), and the durable file keeps the full record.
     val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","minReps":$minReps,"agg":"min","canary":$canaryStr,"canary_warn":$canaryWarn,"retried":$retried,"errored_reps":$erroredReps,"fills":$fillsStr,"vs_prev_median":$vsPrevStr,"failed":${failed.size}}"""
     val jsonFull = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","minReps":$minReps,"agg":"min","rep_times":$repTimes,"canary":$canaryStr,"canary_warn":$canaryWarn,"retried":$retried,"errored_reps":$erroredReps,"fills":$fillsStr,"vs_prev_median":$vsPrevStr,"failed":${failed.size}}"""
+    val profileStr = results.flatMap { case (k, _, _) =>
+      profiles.get(k).map("\"" + k + "\":" + _.json) }.mkString("{", ",", "}")
     println(s"[bench] rep_times=$repTimes")
+    if (outPath.isEmpty) println(s"[bench] profile=$profileStr")
     println(json)
     // Durable copy: BENCH_r10.json lost the first ~31 queries' timings
     // because the driver keeps only a bounded stdout TAIL of this
@@ -266,11 +279,16 @@ object Bench {
     // the 87-entry BENCH_LOCAL.json) — restricted runs stay
     // stdout-only unless an output path is explicitly requested.
     // (outPath resolved above, before the vs_prev_median read.)
+    // The profile lands beside it: X.json -> X.profile.json.
     if (outPath.nonEmpty)
-      try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-        (jsonFull + "\n").getBytes("UTF-8"))
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] could not write $outPath: ${e.getMessage}") }
+      Seq(outPath -> jsonFull,
+          (outPath.stripSuffix(".json") + ".profile.json") -> profileStr)
+        .foreach { case (path, body) =>
+          try java.nio.file.Files.write(java.nio.file.Paths.get(path),
+            (body + "\n").getBytes("UTF-8"))
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] could not write $path: ${e.getMessage}") }
+        }
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }

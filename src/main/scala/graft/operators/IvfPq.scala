@@ -54,7 +54,8 @@ object IvfPq {
       // argmin (`KMeans.MaxLiteralK` dispatch); the subtraction looks
       // the assigned centroid up in the SAME single nested-array
       // literal instead of a k·dims unrolled lookup — still map-side,
-      // no join, and plan size flat in nlist (KMeansLargeKProbe)
+      // no join, and plan size flat in nlist (measured by the
+      // since-deleted `KMeansLargeKProbe`, in git history)
       KMeans.assignFull(q, cents)
         .select(col("vec_id"), col("cluster").as("cell"),
           zip_with(col("qv"),
@@ -759,9 +760,10 @@ object IvfPq {
   /** The TWO-dimensional gate (r19 follow-through on VERDICT r18 #1):
     * when no kCand rung reaches the floor, widening the candidate set
     * further is the WRONG lever — the true neighbors are not in the
-    * probed cells at all (R19RecallProbe measured it: at 10× the m=4
-    * code saturates at 0.76 under nprobe=4 and recovers to 0.85 at
-    * nprobe=8). This face escalates nprobe through its own ladder and
+    * probed cells at all (the since-deleted `R19RecallProbe` measured
+    * it: at 10× the m=4 code saturates at 0.76 under nprobe=4 and
+    * recovers to 0.85 at nprobe=8). This face escalates nprobe through
+    * its own ladder and
     * picks the FIRST (nprobe, kCand) in lexicographic ladder order
     * meeting the floor — the cheapest knob pair, since nprobe rungs
     * cost probed-cell reads on every future query while kCand rungs

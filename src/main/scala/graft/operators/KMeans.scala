@@ -92,8 +92,8 @@ object KMeans {
     * 100 TB shape: per-row work is the unavoidable O(k·dims) of a flat
     * assignment (a 10⁵-cell IVF wants the coarse/fine hierarchy to cut
     * THAT — see IvfPq), but plan size, compile time, and shuffle
-    * volume are all flat in k (KMeansLargeKProbe measures k = 8 →
-    * 4096).
+    * volume are all flat in k (measured at k = 8 → 4096 by the
+    * one-off `KMeansLargeKProbe`, since deleted; it is in git history).
     */
   def assignPackedFull(q: DataFrame, cents: Seq[Array[Long]]): DataFrame = {
     val best = array_min(transform(centroidsLit(cents), (cv, i) =>

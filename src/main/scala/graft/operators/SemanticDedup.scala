@@ -32,9 +32,10 @@ import org.apache.spark.sql.functions._
   * `SimilarityOps.deriveBits` sizing discipline), because a fixed
   * width is the one measured super-linear knob in the suite: at the
   * 10× decade a frozen planes = 8 ran 24× the base pass, and
-  * re-deriving (12 planes) cut it 3× (R14bProbe). Verdicts for
-  * identical-direction duplicates are width-invariant — sign bits are
-  * a function of direction alone, so true copies share every cell at
+  * re-deriving (12 planes) cut it 3× (the since-deleted `R14bProbe`,
+  * in git history). Verdicts for identical-direction duplicates are
+  * width-invariant — sign bits are a function of direction alone, so
+  * true copies share every cell at
   * any width; what widening changes is which DISTINCT-direction pairs
   * are in scope, which is exactly SemDeDup's cluster-count knob. The
   * drop rule is non-recursive (drop any doc with a smaller-id epsilon-
@@ -78,8 +79,9 @@ object SemanticDedup {
     * boundary can straddle the ceil by one ulp cross-engine.
     * Defaults: targetCell 16 keeps expected within-cell pair work at
     * ~16²/2 rows per cell — total pair work then stays ~8·n at every
-    * decade (the fix R14bProbe measured: the 10× corpus derives 12
-    * planes, the width that cut its fixed-width 7.9 s pass to 2.7 s);
+    * decade (the fix the since-deleted `R14bProbe` measured: the 10×
+    * corpus derives 12 planes, the width that cut its fixed-width 7.9 s
+    * pass to 2.7 s);
     * minPlanes 8 preserves the historical width at gated scale (the
     * ≤4096-doc corpora clamp to 8), maxPlanes 24 (16M cells) — past
     * that, occupancy is governed by duplicate mass, not width.

@@ -1,9 +1,9 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Artifacts
 import graft.functions.{DialectSession, GraftFunctions, SnowflakeDialect}
 import graft.serve.SecureShare
 
@@ -335,15 +335,9 @@ final class DemoScriptSession(
     case other => throw new IllegalArgumentException(s"unknown table $other")
   }
 
-  private def rowsAt(path: String): Long = {
-    val fs = FileSystem.get(new Path(path).toUri,
-      spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(path))) 0L
-    else try spark.read.parquet(path).count()
-    // a truncated table can be footer-less (schema-only dir) — that is
-    // zero rows, not an error
-    catch { case _: org.apache.spark.sql.AnalysisException => 0L }
-  }
+  // a truncated table can be a dir with no data file: zero rows
+  private def rowsAt(path: String): Long =
+    Artifacts.readIfPresent(spark, path).fold(0L)(_.count())
 
   // ---- statement classes ---------------------------------------------
   private val useRe =
@@ -440,10 +434,8 @@ final class DemoScriptSession(
           paths.programs)
         tablePaths.foreach(p => require(rowsAt(p) == 0L,
           s"create or replace pipe over non-truncated table at $p"))
-        val fs = FileSystem.get(new Path(paths.root).toUri,
-          spark.sparkContext.hadoopConfiguration)
         (tablePaths ++ Seq(paths.copyHistory, paths.taskHistory,
-          paths.checkpoint)).foreach(p => fs.delete(new Path(p), true))
+          paths.checkpoint)).foreach(Artifacts.remove(spark, _))
         pipeline = Some(new Pipeline(spark, paths, clock, taskIntervalSec))
         pipes((schemaOf(name), simple(name))) =
           s"copy into $target from $stage0"

@@ -164,9 +164,11 @@ final class Pipeline(
 
   /** The reference's copy_history look-back (dp_setup.sql:111,
     * `dateadd(hour, -10, current_timestamp())`): purge and pipe-status
-    * scan only the most recent window of load metadata, so the metadata
-    * join stays bounded as the pipeline ages instead of growing with
-    * total-files-ever-loaded.
+    * keep only the history rows loaded in the last 10 hours. It is a row
+    * filter on `last_load_time`, not a partition filter: every read
+    * still lists and opens every `ops/copy_history` partition, so the
+    * read grows with the batches ever landed (about 3 ms per batch,
+    * ROADMAP item 1).
     */
   val purgeLookbackHours: Int = 10
 
@@ -213,9 +215,10 @@ final class Pipeline(
     * stream.
     *
     * The look-back window applies only to the IN-STREAM call (it runs
-    * every pulse, so bounding its metadata join is what keeps steady-
-    * state purge O(window), and a batch's files are always purged on the
-    * next pulse — far inside the window). The operational default scans
+    * every pulse, and a batch's files are always purged on the next
+    * pulse — far inside the window). The window filters rows after the
+    * whole history is read, so the in-stream purge's cost still grows
+    * with every batch landed (ROADMAP item 1). The operational default scans
     * the FULL history: in-stream purge is deferred one pulse, so the
     * last committed batch's files survive a stop, and if the stream
     * stays down past the look-back their history rows age out of the

@@ -278,12 +278,13 @@ object RetrievalQueries extends QueryPack {
     * (VERDICT r19 #1): when the 2-D knob gate saturates flagged — the
     * measured state at ~100× under m=4 — the build ITSELF runs
     * `IvfPq.retrainDeeper(mLadder = TokMLadder)`: refit at the next m,
-    * re-gate, atomic swap (wired in `servedTokenIvfPqDir`; R20Probe
-    * measures the full loop at the decade fixtures — sfx2 deepens to
-    * m=8 and clears the flag at half the probe width). The gate meets
-    * the 0.8 floor at every driver-tested SF (R20KnobProbe:
-    * 0.850/0.875/0.8625 at sf0.001/0.01/0.1), so the build never
-    * deepens there and the static-m oracle replay stays exact
+    * re-gate, atomic swap (wired in `servedTokenIvfPqDir`; the
+    * since-deleted `R20Probe` measured the full loop at the decade
+    * fixtures — sfx2 deepens to m=8 and clears the flag at half the
+    * probe width). The gate meets the 0.8 floor at every benchmarked SF
+    * (the since-deleted `R20KnobProbe`: 0.850/0.875/0.8625 at
+    * sf0.001/0.01/0.1), so the build never deepens there and the
+    * static-m oracle replay stays exact
     * (HybridServeSpec pins m == TokM on the built artifact at test
     * scale — the hash-safety precondition, re-checked every run).
     */
@@ -297,8 +298,8 @@ object RetrievalQueries extends QueryPack {
   //  - nlist comes from the vector-store row count at build/retrain
   //    time (SimilarityOps.deriveNlist — cell population held at
   //    ~TokCellTarget, so a fixed nprobe reads a constant ROW count
-  //    and a SHRINKING fraction as the corpus grows; R19Probe measures
-  //    the fraction at 10.1×);
+  //    and a SHRINKING fraction as the corpus grows; the since-deleted
+  //    `R19Probe` measured the fraction at 10.1×);
   //  - kCand comes from the recall gate (IvfPq.selectKCandSaved — the
   //    smallest ladder width whose measured served recall@HybK meets
   //    the 0.8 floor on the artifact's own vec_id < TokSampleMax
@@ -328,8 +329,8 @@ object RetrievalQueries extends QueryPack {
   /** The gate's nprobe escalation ladder (r19 2-D gate): when no kCand
     * rung reaches the recall floor the true neighbors are outside the
     * probed cells, so the gate widens the probe set before falling
-    * back to flagged-at-widest (R19RecallProbe: at 10x nprobe 8
-    * restores the floor where kCand 400 cannot).
+    * back to flagged-at-widest (the since-deleted `R19RecallProbe`: at
+    * 10x nprobe 8 restores the floor where kCand 400 cannot).
     */
   private[graft] val TokNprobeLadder = Seq(4, 8)
   private[graft] val TokSampleMax = 8L
@@ -374,10 +375,12 @@ object RetrievalQueries extends QueryPack {
       // the automated code-budget rung IN the build (VERDICT r19 #1):
       // a gate that saturates flagged walks the m ladder and swaps the
       // deeper artifact in before anything serves. At every driver SF
-      // the gate meets the floor (R20KnobProbe), so this is a no-op
+      // the gate meets the floor (the since-deleted `R20KnobProbe`
+      // measured it), so this is a no-op
       // there and the static-TokM oracle replay stays exact; at the
-      // decade fixtures it genuinely fires (R20Probe: sfx2 deepens to
-      // m=8, recall 0.6875 flagged → 0.8375 clear).
+      // decade fixtures it genuinely fires (the since-deleted
+      // `R20Probe`: sfx2 deepens to m=8, recall 0.6875 flagged →
+      // 0.8375 clear).
       if (kn.meanRecallE6 < graft.operators.IvfPq.RecallFloorE6)
         graft.operators.IvfPq.retrainDeeper(s, dir + "/idx",
           TokMLadder, TokPqK, TokCoarseIters, TokPqIters,

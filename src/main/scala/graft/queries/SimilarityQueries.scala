@@ -705,8 +705,8 @@ object SimilarityQueries extends QueryPack {
     // large-k form `KMeans.MaxLiteralK` dispatches to: all centroids
     // as ONE nested-array literal walked by transform/array_min —
     // plan size flat in k, still zero join / zero shuffle, the shape
-    // a 10⁵-cell IVF coarse quantizer needs; KMeansLargeKProbe has
-    // the k = 4096 measurements). Bit-identical to n13 by
+    // a 10⁵-cell IVF coarse quantizer needs; the since-deleted
+    // `KMeansLargeKProbe` measured k = 4096). Bit-identical to n13 by
     // construction and SHARES ITS ORACLE VERBATIM — the n10/n18
     // two-faces-one-oracle discipline: a hash mismatch means the
     // physical paths diverged.
@@ -726,9 +726,10 @@ object SimilarityQueries extends QueryPack {
     // branch — element_at into the single nested-array centroid
     // literal), the encode, the cell-pruned ADC search, and the exact
     // re-rank tail ALL run the packed form a 10⁵-cell index needs —
-    // composed end-to-end, where KMeansLargeKProbe proved only the
-    // assignment in isolation. The oracle is the SAME rerankOracleSql
-    // machinery as n23 with (nlist, iters) swapped — the n24
+    // composed end-to-end, where the since-deleted `KMeansLargeKProbe`
+    // proved only the assignment in isolation. The oracle is the SAME
+    // rerankOracleSql machinery as n23 with (nlist, iters) swapped —
+    // the n24
     // two-faces-one-oracle discipline: a hash mismatch means the packed
     // chain diverged from the replayable semantics anywhere between
     // seeding and final rank. nprobe = 32 of the 256 cells keeps the

@@ -10,20 +10,18 @@ import graft.Tables
   * consumer account.
   *
   * Identity model (SURVEY §7.4 hard-part #6): the account is an explicit
-  * function parameter (primary API) with a session-conf fallback
-  * (`graft.current_account`) standing in for Snowflake's
-  * `current_account()` builtin — read at plan-build time, so it folds to
-  * a literal and Catalyst pushes the `s.account = <acct>` filter below
-  * every join (the whole point of the reference's design: the row filter
-  * hits the fact scan before 97.5M rows move).
+  * function parameter, so it folds to a literal and Catalyst pushes the
+  * `s.account = <acct>` filter below every join (the whole point of the
+  * reference's design: the row filter hits the fact scan before 97.5M
+  * rows move). There is no session fallback; the SQL surface's
+  * `current_account()` reads `GraftFunctions.AccountConfKey` and returns
+  * `UNKNOWN` when it is unset, which no share grants.
   *
   * Masking (dp_demo.sql:226-229): non-publisher accounts see
   * `REDACTED (<md5>)` instead of the real name — same `iff(acct IN
   * (publisher subquery), name, 'REDACTED (' || md5(name) || ')')` shape.
   */
 object GovernedView {
-
-  val ConfKey = "graft.current_account"
 
   /** The security table (FIXTURES.md A.3 analogue over testdata): one row
     * per consumer account with its row-filter LIKE pattern. Tiny → always
@@ -38,9 +36,6 @@ object GovernedView {
       ("JCHA", "ACCT_JCHA", "AUTO%")
     ).toDF("name", "account", "filter")
   }
-
-  def currentAccount(spark: SparkSession): String =
-    spark.conf.get(ConfKey, "ACCT_NYCHA")
 
   /** Column-masking expression: real value for publisher accounts,
     * REDACTED(md5) otherwise (dp_demo.sql:226-229).
@@ -85,8 +80,4 @@ object GovernedView {
         o("o_totalprice"),
         col("account").as("acct"))
   }
-
-  /** Session-conf convenience overload (the `current_account()` analogue). */
-  def orders(spark: SparkSession, sfDir: String): DataFrame =
-    orders(spark, sfDir, currentAccount(spark))
 }

@@ -44,7 +44,7 @@ import graft.operators.QualityModel
   */
 object CorpusStream {
 
-  /** The index's bucket count is a LAYOUT property: entries are
+  /** A bucketed store's bucket count is a LAYOUT property: entries are
     * findable only under the modulus they were written with, so it is
     * persisted in `indexDir/_meta` on first use and every later stream
     * (a restart configured differently included) uses the PERSISTED

@@ -44,7 +44,8 @@ import graft.operators.DedupOps
   *
   * Scale design, mirroring `EventStream.dedupStreamMinBy`'s bucketed
   * sink: the index is a parquet directory hash-partitioned on
-  * `_bucket = pmod(hash(band_key), nBuckets)`; a batch's band keys
+  * `_bucket = pmod(hash(band_key), nBuckets)`, with `nBuckets` stored
+  * on first use (`CorpusStream.persistedBuckets`); a batch's band keys
   * determine its touched buckets, the candidate join reads ONLY those
   * buckets (partition pruning at file-listing time), and kept docs'
   * entries are APPENDED — entries are immutable, no rewrite, per-batch
@@ -235,6 +236,7 @@ object DocStream {
       nBuckets: Int = 64, maxCandidates: Int = 64): DataStreamWriter[Row] = {
     require(threshold <= 1.0,
       "threshold > 1 matches nothing and would break exact-dup collapse")
+    val nB = CorpusStream.persistedBuckets(docs.sparkSession, indexDir, nBuckets)
     BatchSink.stream(docs, checkpointDir) { (batch, batchId) =>
       val spark = batch.sparkSession
       // one signature pass per batch; localCheckpoint because it feeds
@@ -244,7 +246,7 @@ object DocStream {
       // reaches banding, the index join, and the driver fold
       val (repSigs0, members) = collapse(sigs)
       val repSigs = repSigs0.localCheckpoint()
-      val entries = bandEntries(repSigs, k, bands, nBuckets).localCheckpoint()
+      val entries = bandEntries(repSigs, k, bands, nB).localCheckpoint()
 
       // cross-batch matches: smallest INDEXED (= earlier kept) doc
       // sharing a band bucket at estimate >= threshold — the read is

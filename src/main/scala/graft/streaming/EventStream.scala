@@ -265,7 +265,8 @@ object EventStream {
     * delivery orders.
     *
     * The sink itself is the dedup state, laid out as a parquet
-    * directory hash-partitioned on `_bucket = pmod(hash(id), nBuckets)`
+    * directory hash-partitioned on `_bucket = pmod(hash(id), nBuckets)`,
+    * with `nBuckets` stored on first use (`CorpusStream.persistedBuckets`),
     * so the per-batch merge is FILE-PRUNED the way a keyed MERGE INTO
     * on Delta/Iceberg prunes data files: the batch's ids determine the
     * touched buckets, the merge reads ONLY those buckets
@@ -296,13 +297,14 @@ object EventStream {
     */
   def dedupStreamMinBy(events: DataFrame, sinkDir: String, checkpointDir: String,
       idCol: String = "event_id", nBuckets: Int = 64,
-      retentionMs: Option[Long] = None): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+      retentionMs: Option[Long] = None): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+    val nB = CorpusStream.persistedBuckets(events.sparkSession, sinkDir, nBuckets)
     // append mode: the query has no stateful operator, and for such a
     // query Spark treats Update and Append alike
     BatchSink.stream(events.withWatermark("ts", "1 day"), checkpointDir) { (batch, _) =>
       val sess = batch.sparkSession
       val newMin = dedupBatch(batch, idCol)
-        .withColumn("_bucket", pmod(hash(col(idCol)), lit(nBuckets)))
+        .withColumn("_bucket", pmod(hash(col(idCol)), lit(nB)))
       // the touched-bucket set is bounded by nBuckets — a metadata-
       // sized collect, same class as Pipeline's file listings
       val merged = Artifacts.readTouched(Artifacts.readIfPresent(sess, sinkDir),
@@ -316,6 +318,7 @@ object EventStream {
       }
       rewriteBuckets(merged, sinkDir, cutoff)
     }
+  }
 
   /** Rewrite the buckets `rows` holds in the `_bucket`-partitioned
     * `sinkDir`, keeping the rows at or after `cutoff` (all of them when

@@ -353,4 +353,36 @@ class DedupStreamSpec extends AnyFunSuite {
     assert(decisions === expected,
       "stream continued over a compacted index diverged from batch twin")
   }
+
+  test("a restart with a different nBuckets reads the stored bucket count") {
+    // the index is laid out under the FIRST run's modulus; a restart
+    // configured with another one must still find those entries, or the
+    // variants streamed after it would be kept as new docs
+    val expected = DocStream
+      .greedyKeepNearDups(docs.toDF("doc_id", "text"), threshold = 0.5)
+      .collect()
+      .map(r => (r.getLong(0), r.getBoolean(1),
+        if (r.isNullAt(2)) None else Some(r.getLong(2)))).toSet
+    val late = Set(1L, 6L, 11L) // one variant each of groups 0, 2 and 4
+    assert(late.forall(id => expected.exists(d => d._1 == id && !d._2)),
+      "fixture: the late variants must be near-dups")
+    val srcDir = Files.createTempDirectory("graft_ndb_src").toString
+    val base = Files.createTempDirectory("graft_ndb").toString
+    val (indexDir, outDir, ckDir) = (s"$base/idx", s"$base/out", s"$base/ck")
+    def drain(rows: Seq[(Long, String)], i: Int, nBuckets: Int): Unit = {
+      rows.toDF("doc_id", "text").coalesce(1)
+        .write.mode("overwrite").parquet(s"$srcDir/f$i")
+      val src = spark.readStream.schema(docSchema).parquet(s"$srcDir/*")
+      DocStream.nearDupFilter(src, indexDir, outDir, ckDir, threshold = 0.5,
+          nBuckets = nBuckets)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    }
+    drain(docs.filterNot(d => late(d._1)), 0, nBuckets = 64)
+    drain(docs.filter(d => late(d._1)), 1, nBuckets = 2)
+    val decisions = spark.read.parquet(outDir)
+      .select("doc_id", "kept", "matched_id").collect()
+      .map(r => (r.getLong(0), r.getBoolean(1),
+        if (r.isNullAt(2)) None else Some(r.getLong(2)))).toSet
+    assert(decisions === expected)
+  }
 }

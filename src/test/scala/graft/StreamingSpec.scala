@@ -659,4 +659,39 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.select("event_id").exceptAll(
       EventStream.dedupBatch(source).select("event_id")).count() === 0)
   }
+
+  test("bucketed min-by sink: a restart with a different nBuckets reads the stored count") {
+    // the sink is laid out under the FIRST run's modulus; a restart
+    // configured with another one must merge into the same buckets, or
+    // an id already held gets a second row in another bucket
+    val srcDir = Files.createTempDirectory("graft_ev_nbsrc").toString
+    val sink = Files.createTempDirectory("graft_ev_nbsink").toString + "/out"
+    val ckpt = Files.createTempDirectory("graft_ev_nbckpt").toString
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    def runOnce(nBuckets: Int): Unit =
+      EventStream.dedupStreamMinBy(EventStream.readEvents(spark, srcDir), sink,
+          ckpt, nBuckets = nBuckets)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+
+    Files.copy(Paths.get(s"$sf/events.parquet"),
+      Paths.get(srcDir, "a.parquet"), StandardCopyOption.REPLACE_EXISTING)
+    runOnce(nBuckets = 64)
+    val ids = spark.read.parquet(sink).select("event_id").distinct().count()
+    // strictly smaller versions of 20 ids, streamed after a reconfiguration
+    val b2 = Files.createTempDirectory("graft_ev_nb2").toString
+    spark.read.parquet(s"$sf/events.parquet")
+      .filter(col("event_id").between(1L, 20L))
+      .withColumn("value", col("value") - 1e9)
+      .coalesce(1).write.mode("overwrite").parquet(b2)
+    new java.io.File(b2).listFiles.filter(_.getName.endsWith(".parquet"))
+      .foreach(p => Files.copy(p.toPath, Paths.get(srcDir, "b.parquet"),
+        StandardCopyOption.REPLACE_EXISTING))
+    runOnce(nBuckets = 2)
+
+    val sinkDf = spark.read.parquet(sink)
+    assert(sinkDf.count() === ids, "an id gained a second row or lost its row")
+    assert(sinkDf.select("event_id").distinct().count() === ids)
+    assert(sinkDf.filter(col("event_id").between(1L, 20L) && col("value") > -1e8)
+      .isEmpty, "a touched id kept its old value")
+  }
 }
